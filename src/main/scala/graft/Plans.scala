@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * `localCheckpoint` mid-pipeline (the LSH/CC family) additionally get
   * STAGE sections explaining the un-materialized pipeline the
   * post-checkpoint plan hides behind an RDD scan. Usage:
-  *   tools/run.sh graft.Plans [sfDir] > PLANS.md */
+  *   tools/run.sh graft.Plans [sfDir] > PLANS.md
+  *   tools/run.sh graft.Plans [sfDir] qNNN_name... > plans.md
+  * The second form dumps only the named declared queries — the
+  * before/after evidence for a change that moves a few plans. */
 object Plans {
 
   private def dump(title: String, df: DataFrame, note: String = ""): Unit = {
@@ -22,7 +25,10 @@ object Plans {
     println("```\n")
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val (named, args) = argv.partition(SparkEntry.queries.contains)
+    require(args.length <= 1,
+      s"usage: Plans [sfDir] [query...]; unknown query ${args.last}")
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -387,6 +393,12 @@ object Plans {
         "cast before the doc-key sum is the order-invariance " +
         "discipline, and the first-token branch unions one row per " +
         "doc, not a third corpus-wide join."))
+    if (named.nonEmpty) {
+      named.foreach(name => dump(name, SparkEntry.queries(name)(spark, sfDir),
+        notes.getOrElse(name, "")))
+      spark.stop()
+      return
+    }
     println("# PLANS -- formatted physical plans of representative queries\n")
     println(s"Generated against `$sfDir` (plan shapes are SF-invariant).\n")
     picks.foreach { name =>

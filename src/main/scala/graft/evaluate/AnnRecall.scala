@@ -208,8 +208,8 @@ object AnnRecall {
     // per-subspace trained codebook over raw vectors, batched ADC
     val l2cents = SimilaritySearch.ivfCentroidsKMeansL2(embsRaw,
       col("vec_id"), col("embedding"), KIvf)
-    val l2assign = SimilaritySearch.assignAgainstL2(l2cents, embsRaw,
-      col("vec_id"), col("embedding")).select("id", "cid")
+    val l2assign = SimilaritySearch.assignAgainstL2TopA(l2cents, embsRaw,
+      col("vec_id"), col("embedding"), a = 1).select("id", "cid")
     val ql2 = queries.crossJoin(broadcast(l2cents))
       .select(col("qid"), l2sq(col("qv"), col("cvr")).as("cd"), col("cid"))
     val probedL2 = TopK.topKPerGroup(ql2, Seq(col("qid")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import org.apache.spark.sql.graftshim.GraftShim
 
 /**
  * Approximate/exact nearest-neighbor search over an embedding column
@@ -61,8 +62,7 @@ object SimilaritySearch {
       .crossJoin(q)
       .filter(col("_l") =!= col("_ql"))
       .select(col("q_id"), col("neg_id"),
-        graft.functions.VectorFunctions.cosine(col("_v"), col("_qv"))
-          .as("cosine"))
+        cosine(col("_v"), col("_qv")).as("cosine"))
       .filter(col("cosine").isNotNull)
     TopK.topKPerGroup(pairs, Seq(col("q_id")),
         Seq(col("cosine").desc, col("neg_id").asc), k, rankCol = "neg_rank")
@@ -96,26 +96,6 @@ object SimilaritySearch {
     embs.select(idCol.as("id"), vecCol.as("v"),
       lshBucket(vecCol, dims, planes).as("bucket"))
 
-  /** ANN top-k: score only vectors in the query's bucket (single-probe;
-    * multi-probe = union over neighbor buckets). */
-  def lshTopK(embs: DataFrame, idCol: Column, vecCol: Column,
-              query: Seq[Double], dims: Int, planes: Int, k: Int): DataFrame = {
-    val qBucket = {
-      var b = 0
-      for (p <- 0 until planes) {
-        val dot = (0 until dims).map(d => query(d) * planeWeight(p, d)).sum
-        if (dot > 0) b |= (1 << p)
-      }
-      b
-    }
-    val q = array(query.map(lit): _*)
-    TopK.globalTopK(
-      embs.filter(lshBucket(vecCol, dims, planes) === qBucket)
-        .select(idCol.as("id"), cosine(vecCol, q).as("cosine"))
-        .filter(col("cosine").isNotNull),
-      Seq(col("cosine").desc, col("id").asc), k)
-  }
-
   // ---------------- IVF (inverted-file) coarse index ----------------
 
   /** Deterministic IVF coarse centroids: every `modulus`-th id,
@@ -125,7 +105,7 @@ object SimilaritySearch {
   def ivfCentroids(embs: DataFrame, idCol: Column, vecCol: Column,
                    modulus: Int): DataFrame =
     embs.filter(pmod(idCol, lit(modulus)) === 0)
-      .select(idCol.as("cid"), graft.functions.VectorFunctions.unit(vecCol).as("cu"))
+      .select(idCol.as("cid"), unit(vecCol).as("cu"))
       .filter(col("cu").isNotNull)
 
   /**
@@ -149,12 +129,11 @@ object SimilaritySearch {
     * partial agg: the shuffle carries one row per vector. */
   def assignAgainst(cents: DataFrame, embs: DataFrame,
                     idCol: Column, vecCol: Column): DataFrame = {
-    val e = embs.select(idCol.as("id"),
-        graft.functions.VectorFunctions.unit(vecCol).as("u"))
+    val e = embs.select(idCol.as("id"), unit(vecCol).as("u"))
       .filter(col("u").isNotNull)
     e.join(broadcast(cents))
       .select(col("id"),
-        struct(graft.functions.VectorFunctions.dot(col("u"), col("cu")).as("cos"),
+        struct(dot(col("u"), col("cu")).as("cos"),
           (-col("cid")).as("ncid")).as("sc"))
       .groupBy("id").agg(max(col("sc")).as("m"))
       .select(col("id"), (-col("m.ncid")).as("cid"), col("m.cos").as("cosine"))
@@ -170,12 +149,11 @@ object SimilaritySearch {
   private[operators] def assignWithVector(cents: DataFrame, embs: DataFrame,
                                           idCol: Column,
                                           vecCol: Column): DataFrame = {
-    import graft.functions.VectorFunctions
-    val e = embs.select(idCol.as("id"), VectorFunctions.unit(vecCol).as("u"))
+    val e = embs.select(idCol.as("id"), unit(vecCol).as("u"))
       .filter(col("u").isNotNull)
     e.join(broadcast(cents))
       .select(col("id"), col("u"),
-        struct(VectorFunctions.dot(col("u"), col("cu")).as("cos"),
+        struct(dot(col("u"), col("cu")).as("cos"),
           (-col("cid")).as("ncid")).as("sc"))
       .groupBy("id")
       .agg(max(col("sc")).as("m"), first(col("u")).as("u"))
@@ -234,21 +212,20 @@ object SimilaritySearch {
     IvfIndex(ivfCentroids(embs, idCol, vecCol, modulus),
       ivfAssign(embs, idCol, vecCol, modulus))
 
-  /** [[ivfTopK]] against a prebuilt (typically parquet-read) index:
-    * probe the `nprobe` nearest centroid lists, score only their
-    * members. No full-corpus pass — one broadcast of the probed cids,
-    * one scan of the probed lists. */
   /** The query's `nprobe` nearest centroid lists — one tiny top-k over
     * the centroid table, shared by every IVF-family search. */
   private def probedCids(centroids: DataFrame, query: Seq[Double],
                          nprobe: Int): DataFrame = {
     val q = array(query.map(lit): _*)
     TopK.globalTopK(
-      centroids.select(col("cid"),
-        graft.functions.VectorFunctions.dot(col("cu"), q).as("ccos")),
+      centroids.select(col("cid"), dot(col("cu"), q).as("ccos")),
       Seq(col("ccos").desc, col("cid").asc), nprobe).select("cid")
   }
 
+  /** [[ivfTopK]] against a prebuilt (typically parquet-read) index:
+    * probe the `nprobe` nearest centroid lists, score only their
+    * members. No full-corpus pass — one broadcast of the probed cids,
+    * one scan of the probed lists. */
   def ivfTopKFromIndex(embs: DataFrame, idCol: Column, vecCol: Column,
                        index: IvfIndex, query: Seq[Double],
                        nprobe: Int, k: Int): DataFrame = {
@@ -280,80 +257,55 @@ object SimilaritySearch {
   // ---------------- IVF-PQ (probe lists + ADC within lists) ----------------
 
   /** PQ codebook: every `modulus`-th vector held RAW (L2 code space, the
-    * q85 convention) as (cid, cv). Deterministic and engine-portable —
-    * no trained k-means model to ship; k = N/modulus sub-centroids per
-    * subspace (every codebook vector serves all m subspaces). */
+    * q85 convention), sliced into its m `subDim`-wide subspaces — the
+    * per-subspace (s, cid, cvs) frame [[pqCodebookSubKMeans]] emits, so
+    * both codebooks share [[pqCodesSub]] and the ADC tails.
+    * Deterministic and engine-portable — no trained k-means model to
+    * ship; k = N/modulus sub-centroids per subspace (every codebook
+    * vector serves all m subspaces). */
   def pqCodebook(embs: DataFrame, idCol: Column, vecCol: Column,
-                 modulus: Int): DataFrame =
+                 modulus: Int, m: Int, subDim: Int): DataFrame =
     embs.filter(pmod(idCol, lit(modulus)) === 0)
-      .select(idCol.as("cid"), vecCol.as("cv"))
-
-  /** Squared L2 between subspace `s` (0-based, `subDim` wide) of two
-    * vectors. (x−y)·(x−y) with each element widened to double BEFORE the
-    * subtraction — float−float stays float32 and drifts off a double
-    * oracle; multiplication (not pow) is bit-identical across engines. */
-  private def subL2Sq(a: Column, b: Column, s: Column, subDim: Int): Column =
-    graft.functions.VectorFunctions.sqDist(
-      slice(a, s * subDim + 1, lit(subDim)),
-      slice(b, s * subDim + 1, lit(subDim)))
+      .select(idCol.as("cid"), vecCol.as("cv"),
+        explode(sequence(lit(0), lit(m - 1))).as("s"))
+      .select(col("s"), col("cid"),
+        slice(col("cv"), col("s") * subDim + 1, lit(subDim)).as("cvs"))
 
   /**
    * PQ encoding: each vector → m one-byte-ish codes, one per `subDim`-wide
-   * subspace — the per-subspace L2 argmin over the BROADCAST codebook.
-   * Encoding is scan-local (broadcast NL + argmax partial agg: the
-   * shuffle carries one row per (vector, subspace), never per candidate
-   * centroid — the q72 assignAgainst discipline, improving on a window
-   * rank). Ties break to the lowest cid via max(struct(−d, −cid)).
-   * Returns (id, s, cid).
+   * subspace — the per-subspace L2 argmin over the BROADCAST codebook
+   * (s, cid, cvs), joined by subspace. Encoding is scan-local (broadcast
+   * join + argmax partial agg: the shuffle carries one row per (vector,
+   * subspace), never per candidate centroid — the q72 assignAgainst
+   * discipline, improving on a window rank). Ties break to the lowest
+   * cid via max(struct(−d, −cid)). The sub-distance widens each element
+   * to double BEFORE the subtraction (float−float stays float32 and
+   * drifts off a double oracle). Returns (id, s, cid).
    */
-  def pqCodes(embs: DataFrame, idCol: Column, vecCol: Column,
-              codebook: DataFrame, m: Int, subDim: Int): DataFrame = {
-    val e = embs.select(idCol.as("id"), vecCol.as("v"),
-      explode(sequence(lit(0), lit(m - 1))).as("s"))
-    e.join(broadcast(codebook))
+  def pqCodesSub(vecs: DataFrame, idCol: Column, vecCol: Column,
+                 codebookSub: DataFrame, m: Int, subDim: Int): DataFrame =
+    vecs.select(idCol.as("id"), vecCol.as("v"),
+        explode(sequence(lit(0), lit(m - 1))).as("s"))
+      .join(broadcast(codebookSub), Seq("s"))
       .select(col("id"), col("s"),
-        struct((-subL2Sq(col("v"), col("cv"), col("s"), subDim)).as("nd"),
+        struct((-sqDist(slice(col("v"), col("s") * subDim + 1, lit(subDim)),
+            col("cvs"))).as("nd"),
           (-col("cid")).as("ncid")).as("sc"))
       .groupBy("id", "s").agg(max(col("sc")).as("mx"))
       .select(col("id"), col("s"), (-col("mx.ncid")).as("cid"))
-  }
 
-  /**
-   * IVF-PQ search — the production ANN composition (Jégou et al., PAMI
-   * 2011; the FAISS `IndexIVFPQ` shape): the coarse quantizer picks the
-   * query's `nprobe` nearest inverted lists, and ONLY their members are
-   * scored, by asymmetric distance computation over PQ codes — a
-   * per-subspace table lookup of precomputed query→sub-centroid
-   * distances, no float math per candidate.
-   *
-   * Metric contract (matches the repo's gate families so the q73 + q85
-   * oracles compose verbatim): coarse probing in cosine space over unit
-   * vectors ([[ivfAssign]]); ADC in raw L2 within the probed lists
-   * ([[pqCodes]]). On a unit-normalized corpus the two orders coincide
-   * (L2² = 2 − 2·cos on the sphere); on raw corpora the coarse step is
-   * the standard spherical-IVF variant.
-   *
-   * Scale: centroids and codebook broadcast (K, k ≪ N); the corpus scan
-   * touches only probed-list members — with the assignment column as the
-   * storage partition key the unprobed lists are never read; the ADC
-   * join is against an m×k BROADCAST lookup table; the final top-k is a
-   * TakeOrderedAndProject. Candidate memory is m bytes/vector, the
-   * 64×-compression contract that makes billion-scale serving fit RAM.
-   */
-  /** The shared ADC tail of both IVF-PQ paths: codes (id, s, cid) +
-    * codebook + query → per-candidate table-lookup distance, top-k.
-    * The lookup table is m×k BROADCAST rows (query→sub-centroid
-    * distance per (s, cid)); the total is the fixed-order
-    * d0+d1+…+d(m−1) sum (not sum()) — bit-identical across engines. */
-  private def adcTopK(codes: DataFrame, codebook: DataFrame,
-                      query: Seq[Double], m: Int, subDim: Int,
-                      k: Int): DataFrame = {
+  /** The flat ADC tail: codes (id, s, cid) + codebook (s, cid, cvs) +
+    * query → per-candidate table-lookup distance, top-k. The lookup
+    * table is m×k BROADCAST rows (query→sub-centroid distance per
+    * (s, cid)); the total is the fixed-order d0+d1+…+d(m−1) sum (not
+    * sum()) — bit-identical across engines. Returns (id, c0…c(m−1),
+    * adc_dist, rank). */
+  private[graft] def adcTopKSub(codes: DataFrame, codebookSub: DataFrame,
+                                query: Seq[Double], m: Int, subDim: Int,
+                                k: Int): DataFrame = {
     val q = array(query.map(lit): _*)
-    val qd = codebook
-      .select(col("cid"), col("cv"),
-        explode(sequence(lit(0), lit(m - 1))).as("s"))
-      .select(col("s"), col("cid"),
-        subL2Sq(q, col("cv"), col("s"), subDim).as("dq"))
+    val qd = codebookSub.select(col("s"), col("cid"),
+      sqDist(slice(q, col("s") * subDim + 1, lit(subDim)), col("cvs")).as("dq"))
     val aggs = (0 until m).map(i =>
         max(when(col("s") === i, col("cid"))).as(s"c$i")) ++
       (0 until m).map(i =>
@@ -368,6 +320,53 @@ object SimilaritySearch {
       .drop("_t")
   }
 
+  /** The per-list ADC tail of the residual path: codes (id, s, code,
+    * cid list) joined to per-(list, s, code) distances of the list's
+    * query residual `qres` (cid, qr), fixed-order sum, top-k. Returns
+    * (id, list_cid, adc_dist, rank). */
+  private def adcResidualTail(codes: DataFrame, qres: DataFrame,
+                              codebookSub: DataFrame, m: Int, subDim: Int,
+                              k: Int): DataFrame = {
+    val qd = qres
+      .crossJoin(broadcast(codebookSub.withColumnRenamed("cid", "code")))
+      .select(col("cid"), col("s"), col("code"),
+        sqDist(slice(col("qr"), col("s") * subDim + 1, lit(subDim)),
+          col("cvs")).as("dq"))
+    val aggs = max(col("cid")).as("list_cid") +:
+      (0 until m).map(i => max(when(col("s") === i, col("dq"))).as(s"d$i"))
+    val adc = codes
+      .join(broadcast(qd), Seq("cid", "s", "code"))
+      .groupBy("id").agg(aggs.head, aggs.tail: _*)
+    val total = (0 until m).map(i => col(s"d$i")).reduce(_ + _)
+    TopK.globalTopK(
+        adc.select(col("id"), col("list_cid"),
+          round(total, 6).as("adc_dist"), total.as("_t")),
+        Seq(col("_t").asc, col("id").asc), k)
+      .drop("_t")
+  }
+
+  /**
+   * IVF-PQ search — the production ANN composition (Jégou et al., PAMI
+   * 2011; the FAISS `IndexIVFPQ` shape): the coarse quantizer picks the
+   * query's `nprobe` nearest inverted lists, and ONLY their members are
+   * scored, by asymmetric distance computation over PQ codes — a
+   * per-subspace table lookup of precomputed query→sub-centroid
+   * distances, no float math per candidate.
+   *
+   * Metric contract (matches the repo's gate families so the q73 + q85
+   * oracles compose verbatim): coarse probing in cosine space over unit
+   * vectors ([[ivfAssign]]); ADC in raw L2 within the probed lists
+   * ([[pqCodesSub]]). On a unit-normalized corpus the two orders coincide
+   * (L2² = 2 − 2·cos on the sphere); on raw corpora the coarse step is
+   * the standard spherical-IVF variant.
+   *
+   * Scale: centroids and codebook broadcast (K, k ≪ N); the corpus scan
+   * touches only probed-list members — with the assignment column as the
+   * storage partition key the unprobed lists are never read; the ADC
+   * join is against an m×k BROADCAST lookup table; the final top-k is a
+   * TakeOrderedAndProject. Candidate memory is m bytes/vector, the
+   * 64×-compression contract that makes billion-scale serving fit RAM.
+   */
   def ivfPqTopK(embs: DataFrame, idCol: Column, vecCol: Column,
                 query: Seq[Double], ivfModulus: Int, nprobe: Int,
                 pqModulus: Int, m: Int, subDim: Int, k: Int): DataFrame = {
@@ -375,9 +374,9 @@ object SimilaritySearch {
     val probed = probedCids(index.centroids, query, nprobe)
     val members = index.assignments.join(broadcast(probed), "cid").select("id")
     val cand = embs.select(idCol.as("id"), vecCol.as("v")).join(members, "id")
-    val codebook = pqCodebook(embs, idCol, vecCol, pqModulus)
-    val codes = pqCodes(cand, col("id"), col("v"), codebook, m, subDim)
-    adcTopK(codes, codebook, query, m, subDim, k)
+    val codebook = pqCodebook(embs, idCol, vecCol, pqModulus, m, subDim)
+    val codes = pqCodesSub(cand, col("id"), col("v"), codebook, m, subDim)
+    adcTopKSub(codes, codebook, query, m, subDim, k)
   }
 
   /**
@@ -413,109 +412,91 @@ object SimilaritySearch {
       .select(col("id"), col("cid"),
         zip_with(col("v"), col("cvr"),
           (x, y) => x.cast("double") - y.cast("double")).as("r"))
-    val codebook = resid.filter(pmod(col("id"), lit(pqModulus)) === 0)
-      .select(col("id").as("ccid"), col("r").as("cr"))
+    val codebook = pqCodebook(resid, col("id"), col("r"), pqModulus, m,
+      subDim)
     val probed = probedCids(ivfCentroids(embs, idCol, vecCol, ivfModulus),
       query, nprobe)
     // encode ONLY probed-list members (codebook still derives from the
     // full corpus): non-probed codes could never survive the per-list
-    // ADC join below, so restricting first is output-identical and cuts
-    // the per-query encode from O(N) to O(|probed members|) — the same
-    // contract as ivfPqTopK's `cand`
-    val codes = resid.join(broadcast(probed), "cid")
-      .select(col("id"), col("cid"), col("r"),
-        explode(sequence(lit(0), lit(m - 1))).as("s"))
-      .join(broadcast(codebook))
-      .select(col("id"), col("cid"), col("s"),
-        struct((-subL2Sq(col("r"), col("cr"), col("s"), subDim)).as("nd"),
-          (-col("ccid")).as("ncid")).as("sc"))
-      .groupBy("id", "cid", "s").agg(max(col("sc")).as("mx"))
-      .select(col("id"), col("cid"), col("s"), (-col("mx.ncid")).as("ccid"))
+    // ADC join, so restricting first is output-identical and cuts the
+    // per-query encode from O(N) to O(|probed members|) — the same
+    // contract as ivfPqTopK's `cand`. The list id rides in the encode
+    // key, so the per-list ADC join needs no second pass over `resid`.
+    val codes = pqCodesSub(resid.join(broadcast(probed), "cid"),
+        struct(col("id"), col("cid")), col("r"), codebook, m, subDim)
+      .select(col("id.id").as("id"), col("id.cid").as("cid"), col("s"),
+        col("cid").as("code"))
     val q = array(query.map(lit): _*)
     // per-probed-list query residual → per-list ADC lookup table
     val qres = rawCents.join(broadcast(probed), "cid")
       .select(col("cid"),
         zip_with(q, col("cvr"), (x, y) => x - y.cast("double")).as("qr"))
-    val qd = qres.crossJoin(broadcast(codebook))
-      .select(col("cid"), col("ccid"), col("qr"), col("cr"),
-        explode(sequence(lit(0), lit(m - 1))).as("s"))
-      .select(col("cid"), col("s"), col("ccid"),
-        subL2Sq(col("qr"), col("cr"), col("s"), subDim).as("dq"))
-    val aggs = max(col("cid")).as("list_cid") +:
-      (0 until m).map(i => max(when(col("s") === i, col("dq"))).as(s"d$i"))
-    val adc = codes.join(broadcast(qd), Seq("cid", "s", "ccid"))
-      .groupBy("id").agg(aggs.head, aggs.tail: _*)
-    val total = (0 until m).map(i => col(s"d$i")).reduce(_ + _)
-    TopK.globalTopK(
-        adc.select(col("id"), col("list_cid"),
-          round(total, 6).as("adc_dist"), total.as("_t")),
-        Seq(col("_t").asc, col("id").asc), k)
-      .drop("_t")
+    adcResidualTail(codes, qres, codebook, m, subDim, k)
   }
 
-  /** The materialize-once IVF-PQ serving artifacts: the IVF index
-    * (centroids + assignments) plus the PQ codebook and the per-vector
-    * code table (id, s, cid) — everything a search needs WITHOUT the
-    * raw vectors. All four frames parquet-writable; at 100 TB the code
-    * table is m bytes of payload per vector (the 64×-compression
-    * contract) and is stored partitioned by the assignment cid so a
-    * probe reads only its lists' codes. */
-  final case class IvfPqIndex(ivf: IvfIndex, codebook: DataFrame,
-                              codes: DataFrame)
+  /** The materialize-once IVF-PQ serving artifacts — everything a
+    * search needs WITHOUT the raw vectors: the coarse centroid table,
+    * the per-vector list assignment (id, cid, …), the per-subspace PQ
+    * codebook (s, cid, cvs) and the code table (id, s, cid). The
+    * centroid columns name the coarse quantizer: (cid, cu) unit vectors
+    * probed by cosine ([[ivfPqIndex]], [[ivfPqTopKFromIndex]]) or (cid,
+    * cvr) raw centers probed by L2 ([[ivfPqIndexTrainedSpilled]],
+    * [[ivfPqTopKTrainedSpilledRefinedFromIndex]]). All four frames are
+    * parquet-writable ([[storeIndex]]); at 100 TB the code table is m
+    * bytes of payload per vector (the 64×-compression contract) and is
+    * stored partitioned by the assignment cid so a probe reads only its
+    * lists' codes. */
+  final case class IvfPqTrainedIndex(centroids: DataFrame,
+                                     assignments: DataFrame,
+                                     codebook: DataFrame, codes: DataFrame)
 
-  /** Build the IVF-PQ artifacts once per corpus version: IVF build +
-    * codebook + full-corpus PQ encode (the only whole-corpus passes;
+  /** Build the modulus IVF-PQ artifacts once per corpus version: IVF
+    * build (cosine centroids (cid, cu), assignments (id, cid, cosine))
+    * + codebook + full-corpus PQ encode — the only whole-corpus passes;
     * every subsequent search reads the stored frames via
-    * [[ivfPqTopKFromIndex]]). A vector delta appends via the same
-    * kernels: `assignAgainst` for the delta's lists, [[pqCodes]] for
+    * [[ivfPqTopKFromIndex]]. A vector delta appends via the same
+    * kernels: `assignAgainst` for the delta's lists, [[pqCodesSub]] for
     * the delta's codes — both against the STORED centroid/codebook
     * tables, work ∝ delta (the q134 discipline). */
   def ivfPqIndex(embs: DataFrame, idCol: Column, vecCol: Column,
                  ivfModulus: Int, pqModulus: Int, m: Int,
-                 subDim: Int): IvfPqIndex = {
-    val cb = pqCodebook(embs, idCol, vecCol, pqModulus)
-    IvfPqIndex(ivfIndex(embs, idCol, vecCol, ivfModulus), cb,
-      pqCodes(embs, idCol, vecCol, cb, m, subDim))
+                 subDim: Int): IvfPqTrainedIndex = {
+    val ivf = ivfIndex(embs, idCol, vecCol, ivfModulus)
+    val cb = pqCodebook(embs, idCol, vecCol, pqModulus, m, subDim)
+    IvfPqTrainedIndex(ivf.centroids, ivf.assignments, cb,
+      pqCodesSub(embs, idCol, vecCol, cb, m, subDim))
   }
 
   /**
-   * [[ivfPqTopK]] against a prebuilt (typically parquet-read) index:
-   * the query needs ONLY the stored frames — probed cids from the
-   * centroid table, members from the assignment table, candidate
+   * [[ivfPqTopK]] against a prebuilt (typically parquet-read) modulus
+   * index: the query needs ONLY the stored frames — probed cids from the
+   * cosine centroid table, members from the assignment table, candidate
    * distances from the stored CODES joined to the m×k broadcast ADC
    * lookup. The raw embedding table is never touched: this is the
    * RAM-resident serving shape (codes ≈ m bytes/vector) that makes
    * billion-scale ANN fit a small cluster.
    */
-  def ivfPqTopKFromIndex(index: IvfPqIndex, query: Seq[Double],
+  def ivfPqTopKFromIndex(index: IvfPqTrainedIndex, query: Seq[Double],
                          nprobe: Int, m: Int, subDim: Int,
                          k: Int): DataFrame = {
-    val probed = probedCids(index.ivf.centroids, query, nprobe)
-    val members = index.ivf.assignments.join(broadcast(probed), "cid")
+    val probed = probedCids(index.centroids, query, nprobe)
+    val members = index.assignments.join(broadcast(probed), "cid")
       .select("id")
-    adcTopK(index.codes.join(members, "id"), index.codebook, query, m,
+    adcTopKSub(index.codes.join(members, "id"), index.codebook, query, m,
       subDim, k)
   }
 
   /**
-   * Exact re-ranking of an approximate shortlist — the two-stage serving
-   * composition every production ANN system runs (the FAISS
+   * Exact re-ranking of an approximate shortlist (the FAISS
    * `IndexRefineFlat` shape): a cheap approximate stage (ADC over PQ
-   * codes, an LSH probe, an IVF scan) produces `R ≥ k` candidate ids,
-   * and ONLY those R rows' raw vectors are fetched and scored by true
-   * cosine; the final top-k ranks by the exact score. PQ quantization
-   * error perturbs ordering near the boundary — re-ranking a modest
-   * shortlist (R ≈ 2–10×k) restores exact-metric ordering within the
-   * shortlist at a cost independent of corpus size.
-   *
-   * `shortlist` is any frame with an `id` column (typically
-   * [[ivfPqTopK]]/[[ivfPqTopKFromIndex]] output). Scale shape: the
-   * shortlist is R rows — BROADCAST onto the embedding table, so the
-   * raw-vector fetch is a storage-pruned point read when `id` is the
-   * table's sort/bucket key (the q143 layout note), never a full scan
-   * shuffle; the exact scoring is R cosines; the top-k is a
-   * TakeOrderedAndProject. The raw vectors live only in this final
-   * R-row stage — the corpus-wide scan stays on m-byte codes.
+   * codes, a Hamming scan, an IVF probe) produces `R ≥ k` candidate ids
+   * in `shortlist` (any frame with an `id` column), and ONLY those R
+   * rows' raw vectors are scored by true cosine — restoring
+   * exact-metric ordering within the shortlist at a cost independent of
+   * corpus size. The R ids BROADCAST onto the embedding table, so the
+   * fetch is a storage-pruned point read when `id` is the table's
+   * sort/bucket key (the q143 layout note); the top-k is a
+   * TakeOrderedAndProject.
    */
   def refineTopK(embs: DataFrame, idCol: Column, vecCol: Column,
                  shortlist: DataFrame, query: Seq[Double], k: Int): DataFrame = {
@@ -541,7 +522,7 @@ object SimilaritySearch {
    * table the refine stage point-reads (id as sort/bucket key per the
    * q143 layout note); the corpus-wide scan stays on m-byte codes.
    */
-  def ivfPqTopKRefinedFromIndex(index: IvfPqIndex, embs: DataFrame,
+  def ivfPqTopKRefinedFromIndex(index: IvfPqTrainedIndex, embs: DataFrame,
                                 idCol: Column, vecCol: Column,
                                 query: Seq[Double], nprobe: Int, m: Int,
                                 subDim: Int, k: Int,
@@ -559,25 +540,21 @@ object SimilaritySearch {
     // per-row unit normalization below the join (VectorFunctions.unit
     // scaladoc) — per-pair cosine = one dot pass
     val e = embs.select(idCol.as("id"), blockCol.as("block"),
-        graft.functions.VectorFunctions.unit(vecCol).as("u"))
-      .filter(col("u").isNotNull)
+        unit(vecCol).as("u")).filter(col("u").isNotNull)
     val pairs = e.as("x").join(e.as("y"),
         col("x.block") === col("y.block") && col("x.id") =!= col("y.id"))
       .select(col("x.id").as("id"), col("y.id").as("neighbor"),
-        graft.functions.VectorFunctions.dot(col("x.u"), col("y.u")).as("cosine"))
+        dot(col("x.u"), col("y.u")).as("cosine"))
     TopK.topKPerGroup(pairs, Seq(col("id")),
       Seq(col("cosine").desc, col("neighbor").asc), k, "nn_rank")
   }
 
   // ---------------- Trained quantizers (seeded MLlib k-means) ----------------
-  // The modulus-sampled quantizers above are deterministic, engine-portable
-  // correctness twins (their oracles replay them verbatim in SQL). These are
-  // the PRODUCTION quantizers: k-means|| centroids/codebooks, which is what
-  // sets measured recall (r11 ledger: modulus IVF-PQ recall@10 = 0.11 with
-  // the residual variant BELOW flat PQ — the codebook, not the algorithm,
-  // was the binding constraint). Seeded + canonicalized layout, so the
-  // trained frames are reproducible goldens; spec-gated recall floors live
-  // in AnnRecallSpec, measured values in metrics_detail.json.
+  // The modulus quantizers above are deterministic, engine-portable
+  // correctness twins (their oracles replay them verbatim in SQL); these
+  // k-means centroids/codebooks are the PRODUCTION quantizers that set
+  // measured recall. Seeded + canonicalized layout, so the trained frames
+  // are reproducible goldens; recall floors live in AnnRecallSpec.
 
   /** Canonical layout before any MLlib fit: k-means|| is seeded, but its
     * init sampling walks partitions, so the SAME rows in a different
@@ -585,18 +562,18 @@ object SimilaritySearch {
     * in-partition sort makes the fit a function of (data, seed) alone —
     * the MetricsLedger.canon discipline, applied where the model is
     * built so every caller (bench local[32], specs local[4], a real
-    * cluster) gets the same centers. */
-  private def canonForFit(df: DataFrame, key: Column): DataFrame =
-    // the fixed 4-way layout presumes a BOUNDED training frame: callers
-    // bound it with `trainFrac` (hash-sampled) before the fit — at
+    * cluster) gets the same centers. The training rows are the
+    * deterministic md5-hash sample `trainFrac` of the (id, …) frame `e`,
+    * salted per quantizer — layout- and engine-stable because membership
+    * is a pure hash of the id. */
+  private def canonForFit(e: DataFrame, salt: String,
+                          trainFrac: Double): DataFrame = {
+    val train = if (trainFrac >= 1.0) e
+      else e.filter(Sampling.hashUniform(col("id"), salt) < trainFrac)
+    // the fixed 4-way layout presumes a BOUNDED training frame: at
     // 100 TB pass trainFrac so the sample, not the corpus, lands here
-    df.repartition(4, key).sortWithinPartitions(key)
-
-  // maxIter/initMode exist for INSTRUMENT callers (q210 trains 24
-  // codebooks in one query — at a bounded 2k-row sample, k-means|| init
-  // + 20 Lloyd rounds is pure scheduler overhead: the job COUNT, not
-  // the row count, is the cost); every index-build path keeps the
-  // defaults, so existing goldens are untouched
+    train.repartition(4, col("id")).sortWithinPartitions(col("id"))
+  }
 
   /** Row bound for the driver-local k-means replay
     * ([[org.apache.spark.mllib.clustering.GraftLocalKMeans]] — the r18
@@ -604,13 +581,11 @@ object SimilaritySearch {
     * `trainFrac` sample ran ~12 Spark jobs of pure scheduler overhead).
     * Training samples are ≤2048 rows by the 100 TB build contract;
     * 65536 (32 MB of doubles at d=64) keeps comfortable driver headroom
-    * while any caller feeding an unbounded frame stays distributed.
-    * Env-overridable for A/B; 0 disables the local path entirely.
-    * Centers are bit-identical to the distributed fit (LocalKMeansSpec
-    * pins doubleToRawLongBits equality on every trained config). */
-  private val LocalKMeansMaxRows: Long =
-    sys.env.get("SPARK_GRAFT_LOCAL_KMEANS_MAX").map(_.toLong)
-      .getOrElse(65536L)
+    * while any caller feeding an unbounded frame stays distributed, so
+    * the row count alone picks the path. Centers are bit-identical to
+    * the distributed fit (LocalKMeansSpec pins doubleToRawLongBits
+    * equality on every trained config). */
+  private val LocalKMeansMaxRows = 65536L
 
   /** Partition-structured collect of a vector column — the exact rows,
     * partition split and in-partition order the distributed MLlib fit
@@ -636,35 +611,29 @@ object SimilaritySearch {
       .clusterCenters.map(_.toArray)
 
   private def fitKMeans(train: DataFrame, featCol: String, k: Int,
-                        seed: Long, maxIter: Int = 20,
-                        initMode: String = "k-means||"): Array[Array[Double]] =
-    if (LocalKMeansMaxRows > 0 && train.count() <= LocalKMeansMaxRows)
+                        seed: Long): Array[Array[Double]] =
+    if (train.count() <= LocalKMeansMaxRows)
       org.apache.spark.mllib.clustering.GraftLocalKMeans.fit(
-        collectVectorParts(train, featCol), k, maxIter, 1e-6, seed, initMode)
+        collectVectorParts(train, featCol), k, 20, 1e-6, seed, "k-means||")
     else
-      fitKMeansDistributed(train, featCol, k, seed, maxIter, initMode)
+      fitKMeansDistributed(train, featCol, k, seed, 20, "k-means||")
 
   /**
    * TRAINED IVF coarse centroids — seeded spherical k-means over unit
    * vectors (cluster means re-normalized to the sphere), drop-in for
    * [[ivfCentroids]]: returns (cid: 0..k−1 dense, cu unit). Training
-   * runs on a deterministic md5-hash sample (`trainFrac`) — the 100 TB
-   * path trains on a bounded sample and assigns at full scale, exactly
-   * the FAISS practice; the sample is layout- and engine-stable because
-   * membership is a pure hash of the id. Empty clusters (possible under
+   * runs on the `trainFrac` hash sample — the 100 TB path trains on a
+   * bounded sample and assigns at full scale, exactly the FAISS
+   * practice. Empty clusters (possible under
    * k-means||) are dropped, so callers must treat k as an upper bound.
    */
   def ivfCentroidsKMeans(embs: DataFrame, idCol: Column, vecCol: Column,
                          k: Int, seed: Long = 42L,
                          trainFrac: Double = 1.0): DataFrame = {
     val spark = embs.sparkSession
-    val e = embs.select(idCol.as("id"),
-        graft.functions.VectorFunctions.unit(vecCol).as("u"))
+    val e = embs.select(idCol.as("id"), unit(vecCol).as("u"))
       .filter(col("u").isNotNull)
-    val train = if (trainFrac >= 1.0) e
-      else e.filter(Sampling.hashUniform(col("id"), "ivf-km") < trainFrac)
-    val centers = fitKMeans(
-      canonForFit(train, col("id"))
+    val centers = fitKMeans(canonForFit(e, "ivf-km", trainFrac)
         .withColumn("f", org.apache.spark.ml.functions.array_to_vector(col("u")))
         .select("id", "f"),
       "f", k, seed)
@@ -688,10 +657,7 @@ object SimilaritySearch {
     val e = embs.select(idCol.as("id"),
       vecCol.cast("array<double>").as("v"))
       .filter(col("v").isNotNull)
-    val train = if (trainFrac >= 1.0) e
-      else e.filter(Sampling.hashUniform(col("id"), "ivf-km-l2") < trainFrac)
-    val centers = fitKMeans(
-      canonForFit(train, col("id"))
+    val centers = fitKMeans(canonForFit(e, "ivf-km-l2", trainFrac)
         .withColumn("f", org.apache.spark.ml.functions.array_to_vector(col("v")))
         .select("id", "f"),
       "f", k, seed)
@@ -699,20 +665,6 @@ object SimilaritySearch {
     centers.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }
       .toDF("cid", "cvr")
   }
-
-  /** Min-L2 assignment against an explicit RAW centroid table
-    * (cid, cvr) — the L2 twin of [[assignAgainst]]: broadcast NL join +
-    * argmin partial agg, shuffle carries one row per vector. Returns
-    * (id, cid, l2sq). */
-  def assignAgainstL2(cents: DataFrame, embs: DataFrame,
-                      idCol: Column, vecCol: Column): DataFrame =
-    embs.select(idCol.as("id"), vecCol.as("v"))
-      .join(broadcast(cents))
-      .select(col("id"),
-        struct((-graft.functions.VectorFunctions.sqDist(col("v"), col("cvr"))).as("nd"),
-          (-col("cid")).as("ncid")).as("sc"))
-      .groupBy("id").agg(max(col("sc")).as("m"))
-      .select(col("id"), (-col("m.ncid")).as("cid"), (-col("m.nd")).as("l2sq"))
 
   /**
    * Top-A min-L2 "spilled" assignment — multi-assignment, the standard
@@ -728,11 +680,10 @@ object SimilaritySearch {
    * when the fixture's lists are coarse relative to the true-neighbor
    * radius, which is exactly the regime the 0.81 ceiling diagnosed.
    *
-   * Same broadcast-NL + bounded per-id top-A plan as
-   * [[assignAgainstL2]] (the shuffle carries A rows per vector);
-   * `arank` (1..A) records the home-list rank so a consumer can
-   * reconstruct the A=1 assignment by filtering. Deterministic
-   * lowest-cid tiebreak.
+   * Broadcast NL join + bounded per-id top-A (the shuffle carries A
+   * rows per vector); `arank` (1..A) records the home-list rank, and
+   * A=1 is the plain min-L2 assignment. Deterministic lowest-cid
+   * tiebreak.
    */
   def assignAgainstL2TopA(cents: DataFrame, embs: DataFrame,
                           idCol: Column, vecCol: Column,
@@ -742,8 +693,7 @@ object SimilaritySearch {
         vecCol.cast("array<double>").as("v"))
       .filter(col("v").isNotNull)
       .join(broadcast(cents))
-      .select(col("id"), col("cid"),
-        graft.functions.VectorFunctions.sqDist(col("v"), col("cvr")).as("l2sq"))
+      .select(col("id"), col("cid"), sqDist(col("v"), col("cvr")).as("l2sq"))
     TopK.topKPerGroup(scored, Seq(col("id")),
         Seq(col("l2sq").asc, col("cid").asc), a, rankCol = "arank")
       .select(col("id"), col("cid"), col("arank"))
@@ -755,8 +705,7 @@ object SimilaritySearch {
                            nprobe: Int): DataFrame = {
     val q = array(query.map(lit): _*)
     TopK.globalTopK(
-      cents.select(col("cid"),
-        graft.functions.VectorFunctions.sqDist(q, col("cvr")).as("cd")),
+      cents.select(col("cid"), sqDist(q, col("cvr")).as("cd")),
       Seq(col("cd").asc, col("cid").asc), nprobe).select("cid")
   }
 
@@ -771,6 +720,9 @@ object SimilaritySearch {
    * `vecs` is any (id, v) frame — raw vectors for flat PQ, residuals
    * for the residual variant. m driver-side fits over the hash-sampled
    * training set; at 100 TB each fit sees the bounded sample only.
+   * `maxIter`/`initMode` exist for instrument callers (q210 trains 24
+   * codebooks in one query, where k-means|| init + 20 Lloyd rounds is
+   * pure scheduler overhead); index builds keep the defaults.
    */
   def pqCodebookSubKMeans(vecs: DataFrame, idCol: Column, vecCol: Column,
                           m: Int, subDim: Int, k: Int, seed: Long = 42L,
@@ -780,9 +732,7 @@ object SimilaritySearch {
     val e = vecs.select(idCol.as("id"),
       vecCol.cast("array<double>").as("v"))
       .filter(col("v").isNotNull) // null vector = no trainable features
-    val train = (if (trainFrac >= 1.0) e
-      else e.filter(Sampling.hashUniform(col("id"), "pq-km") < trainFrac))
-    val canon = canonForFit(train, col("id"))
+    val canon = canonForFit(e, "pq-km", trainFrac)
     // r18: at a bounded sample (the trainFrac contract) the m fits run
     // entirely on the driver from ONE partition-structured collect —
     // slice(v, s·subDim+1, subDim) + array_to_vector is replayed as a
@@ -792,17 +742,13 @@ object SimilaritySearch {
     // Lloyd-rounds) — the q210/q204/q211/q214 job storm (452 jobs for
     // q210) was ~60% k-means scheduler overhead over ≤2048 rows.
     val rows: Seq[(Int, Long, Seq[Double])] =
-      if (LocalKMeansMaxRows > 0 && canon.count() <= LocalKMeansMaxRows) {
-        val parts: Array[Array[Array[Double]]] = canon.select("v").rdd
-          .mapPartitionsWithIndex { (i, it) =>
-            Iterator((i, it.map(_.getSeq[Double](0).toArray).toArray))
-          }
-          .collect().sortBy(_._1).map(_._2)
+      if (canon.count() <= LocalKMeansMaxRows) {
+        val parts = collectVectorParts(canon.select(
+          org.apache.spark.ml.functions.array_to_vector(col("v")).as("f")), "f")
         (0 until m).flatMap { s =>
           val sliced = parts.map(_.map(v =>
-            org.apache.spark.mllib.linalg.Vectors.dense(
-              java.util.Arrays.copyOfRange(v, s * subDim, s * subDim + subDim))
-              : org.apache.spark.mllib.linalg.Vector))
+            org.apache.spark.mllib.linalg.Vectors.dense(java.util.Arrays
+              .copyOfRange(v.toArray, s * subDim, s * subDim + subDim))))
           org.apache.spark.mllib.clustering.GraftLocalKMeans
             .fit(sliced, k, maxIter, 1e-6, seed + s, initMode)
             .zipWithIndex.map { case (c, i) => (s, i.toLong, c.toSeq) }
@@ -840,183 +786,19 @@ object SimilaritySearch {
     rows.toDF("s", "cid", "cvs")
   }
 
-  /** PQ encoding against a PER-SUBSPACE codebook (s, cid, cvs) — the
-    * [[pqCodes]] kernel with the broadcast join keyed by subspace.
-    * Returns (id, s, cid). */
-  def pqCodesSub(vecs: DataFrame, idCol: Column, vecCol: Column,
-                 codebookSub: DataFrame, m: Int, subDim: Int): DataFrame =
-    vecs.select(idCol.as("id"), vecCol.as("v"),
-        explode(sequence(lit(0), lit(m - 1))).as("s"))
-      .join(broadcast(codebookSub), Seq("s"))
-      .select(col("id"), col("s"),
-        struct((-graft.functions.VectorFunctions.sqDist(
-            slice(col("v"), col("s") * subDim + 1, lit(subDim)), col("cvs"))).as("nd"),
-          (-col("cid")).as("ncid")).as("sc"))
-      .groupBy("id", "s").agg(max(col("sc")).as("mx"))
-      .select(col("id"), col("s"), (-col("mx.ncid")).as("cid"))
-
-  /** ADC tail against a per-subspace codebook: the [[adcTopK]] m×k
-    * broadcast-lookup shape, with the query table built from (s, cid,
-    * cvs) directly. */
-  private def adcTopKSub(codes: DataFrame, codebookSub: DataFrame,
-                         query: Seq[Double], m: Int, subDim: Int,
-                         k: Int): DataFrame = {
-    val q = array(query.map(lit): _*)
-    val qd = codebookSub.select(col("s"), col("cid"),
-      graft.functions.VectorFunctions.sqDist(
-        slice(q, col("s") * subDim + 1, lit(subDim)), col("cvs")).as("dq"))
-    val aggs = (0 until m).map(i =>
-        max(when(col("s") === i, col("cid"))).as(s"c$i")) ++
-      (0 until m).map(i =>
-        max(when(col("s") === i, col("dq"))).as(s"d$i"))
-    val adc = codes.join(broadcast(qd), Seq("s", "cid"))
-      .groupBy("id").agg(aggs.head, aggs.tail: _*)
-    val total = (0 until m).map(i => col(s"d$i")).reduce(_ + _)
-    TopK.globalTopK(
-        adc.select(col("id") +: (0 until m).map(i => col(s"c$i")) :+
-          round(total, 6).as("adc_dist") :+ total.as("_t"): _*),
-        Seq(col("_t").asc, col("id").asc), k)
-      .drop("_t")
-  }
-
-  /**
-   * TRAINED IVF-PQ search, flat codes: L2 k-means coarse quantizer
-   * (probe `nprobe` min-L2 lists) + per-subspace trained codebook over
-   * RAW vectors, ADC within probed lists. Same plan shape and scale
-   * contract as [[ivfPqTopK]] (broadcast kernels, partial-agg argmins,
-   * m bytes/vector candidate memory) — only the quantizer quality
-   * changes. `kIvf`/`kSub` are the centroid/code budgets.
-   */
-  def ivfPqTopKTrained(embs: DataFrame, idCol: Column, vecCol: Column,
-                       query: Seq[Double], kIvf: Int, nprobe: Int,
-                       kSub: Int, m: Int, subDim: Int, k: Int,
-                       seed: Long = 42L,
-                       trainFrac: Double = 1.0): DataFrame = {
-    val cents = ivfCentroidsKMeansL2(embs, idCol, vecCol, kIvf, seed,
-      trainFrac)
-    val assign = assignAgainstL2(cents, embs, idCol, vecCol).select("id", "cid")
-    val probed = probedCidsL2(cents, query, nprobe)
-    val members = assign.join(broadcast(probed), "cid").select("id")
-    val cand = embs.select(idCol.as("id"), vecCol.as("v")).join(members, "id")
-    val cb = pqCodebookSubKMeans(embs, idCol, vecCol, m, subDim, kSub, seed,
-      trainFrac)
-    adcTopKSub(pqCodesSub(cand, col("id"), col("v"), cb, m, subDim),
-      cb, query, m, subDim, k)
-  }
-
-  /**
-   * TRAINED residual IVF-PQ — the faithful `IndexIVFPQ` (Jégou et al.
-   * 2011 §III) with both quantizers k-means-trained: codes encode the
-   * residual `v − center(v)` against the L2 coarse centers, the
-   * per-subspace codebook is trained ON the residuals (small, centered
-   * — where the trained-codebook win is largest), and ADC is per-list
-   * (each probed list gets its own query residual and its own m×k
-   * table; nprobe·m·k broadcast rows). With the r11 modulus codebook
-   * the residual variant measured BELOW flat PQ (0.05 vs 0.07
-   * recall@10) — the training, not the residual algebra, is what this
-   * variant buys. Encode restricted to probed-list members, the
-   * [[ivfPqResidualTopK]] contract.
-   */
-  def ivfPqResidualTopKTrained(embs: DataFrame, idCol: Column,
-                               vecCol: Column, query: Seq[Double],
-                               kIvf: Int, nprobe: Int, kSub: Int, m: Int,
-                               subDim: Int, k: Int,
-                               seed: Long = 42L,
-                               trainFrac: Double = 1.0): DataFrame = {
-    val cents = ivfCentroidsKMeansL2(embs, idCol, vecCol, kIvf, seed,
-      trainFrac)
-    val assign = assignAgainstL2(cents, embs, idCol, vecCol).select("id", "cid")
-    val resid = embs.select(idCol.as("id"), vecCol.as("v"))
-      .join(assign, "id")
-      .join(broadcast(cents), "cid")
-      .select(col("id"), col("cid"),
-        zip_with(col("v"), col("cvr"),
-          (x, y) => x.cast("double") - y.cast("double")).as("r"))
-    val cb = pqCodebookSubKMeans(resid, col("id"), col("r"), m, subDim,
-      kSub, seed, trainFrac)
-    val probed = probedCidsL2(cents, query, nprobe)
-    val probedResid = resid.join(broadcast(probed), "cid")
-    val codes = pqCodesSub(probedResid, col("id"), col("r"), cb, m, subDim)
-      .withColumnRenamed("cid", "code")
-      .join(probedResid.select(col("id"), col("cid")), "id")
-    val q = array(query.map(lit): _*)
-    // per-probed-list query residual → per-list ADC lookup table
-    val qres = cents.join(broadcast(probed), "cid")
-      .select(col("cid"),
-        zip_with(q, col("cvr"), (x, y) => x - y.cast("double")).as("qr"))
-    adcResidualTail(codes, qres, cb, m, subDim, k)
-  }
-
-  /** The materialize-once artifacts of the TRAINED IVF-PQ family —
-    * the production index a corpus version ships: L2 k-means coarse
-    * centers (cid, cvr), full-corpus assignments (id, cid), the
-    * per-subspace trained codebook (s, cid, cvs) and the per-vector
-    * code table (id, s, cid). All parquet-writable; the same storage
-    * contract as [[IvfPqIndex]] (codes partitioned by the assignment
-    * cid so a probe reads only its lists). */
-  final case class IvfPqTrainedIndex(centroids: DataFrame,
-                                     assignments: DataFrame,
-                                     codebook: DataFrame, codes: DataFrame)
-
-  /** Build the trained index once per corpus version (the only passes
-    * that touch every vector: one assignment, one encode; the k-means
-    * fits see the `trainFrac` hash-sample only). Deltas append via
-    * [[assignAgainstL2]] + [[pqCodesSub]] against the STORED
-    * centroid/codebook frames, work ∝ delta — the q134 discipline. */
-  def ivfPqIndexTrained(embs: DataFrame, idCol: Column, vecCol: Column,
-                        kIvf: Int, kSub: Int, m: Int, subDim: Int,
-                        seed: Long = 42L,
-                        trainFrac: Double = 1.0): IvfPqTrainedIndex = {
-    val cents = ivfCentroidsKMeansL2(embs, idCol, vecCol, kIvf, seed,
-      trainFrac)
-    val cb = pqCodebookSubKMeans(embs, idCol, vecCol, m, subDim, kSub,
-      seed, trainFrac)
-    IvfPqTrainedIndex(cents,
-      assignAgainstL2(cents, embs, idCol, vecCol).select("id", "cid"),
-      cb, pqCodesSub(embs, idCol, vecCol, cb, m, subDim))
-  }
-
-  /** [[ivfPqTopKTrained]] against a prebuilt (typically parquet-read)
-    * trained index: probed lists from the stored centers, candidates
-    * from the stored assignments, ADC over the stored codes — the raw
-    * vectors are never touched. Output ≡ the inline build (codes are
-    * per-vector facts independent of probing; spec-pinned). */
-  def ivfPqTopKTrainedFromIndex(index: IvfPqTrainedIndex,
-                                query: Seq[Double], nprobe: Int, m: Int,
-                                subDim: Int, k: Int): DataFrame = {
-    val probed = probedCidsL2(index.centroids, query, nprobe)
-    val members = index.assignments.join(broadcast(probed), "cid")
-      .select("id")
-    adcTopKSub(index.codes.join(members, "id"), index.codebook, query, m,
-      subDim, k)
-  }
-
-  /** The trained serving entry end-to-end: stored-index ADC shortlist
-    * (R = refineFactor·k) + exact cosine re-rank — [[ivfPqTopKRefinedFromIndex]]
-    * for the trained family. Measured at the gate fixture: recall@10
-    * rises from 0.56 (raw ADC) to 0.81, the probed-list coverage
-    * ceiling (`AnnRecallSpec`'s refined row). */
-  def ivfPqTopKTrainedRefinedFromIndex(index: IvfPqTrainedIndex,
-                                       embs: DataFrame, idCol: Column,
-                                       vecCol: Column, query: Seq[Double],
-                                       nprobe: Int, m: Int, subDim: Int,
-                                       k: Int,
-                                       refineFactor: Int = 3): DataFrame = {
-    require(refineFactor >= 1, s"refineFactor must be >= 1 (got $refineFactor)")
-    refineTopK(embs, idCol, vecCol,
-      ivfPqTopKTrainedFromIndex(index, query, nprobe, m, subDim,
-        refineFactor * k),
-      query, k)
-  }
-
   /**
    * Trained IVF-PQ index with SPILLED (top-A multi-) assignment — the
    * round-16 answer to the measured 0.81 probed-list-coverage ceiling
-   * (SCALING.md §7j): same artifacts as [[ivfPqIndexTrained]] except
-   * the assignment table stores each vector under its A nearest lists
-   * ([[assignAgainstL2TopA]]; `arank` kept so A=1 is recoverable by
-   * filter). Codes stay one row per (vector, subspace) — only the
-   * assignment table grows A×. Measured on the gate fixture (kIvf=100,
+   * (SCALING.md §7j): L2 k-means coarse centers (cid, cvr), the
+   * per-subspace trained codebook, and an assignment table that stores
+   * each vector under its A nearest lists ([[assignAgainstL2TopA]];
+   * `arank` kept so A=1 is recoverable by filter). Codes stay one row
+   * per (vector, subspace) — only the assignment table grows A×. The
+   * k-means fits see the `trainFrac` hash-sample only; a vector delta
+   * appends via [[assignAgainstL2TopA]] + [[pqCodesSub]] against the
+   * STORED centroid/codebook frames, work ∝ delta, and base ∪ delta ≡
+   * the one-shot build (the q134 discipline; `SpilledServingSpec` pins
+   * it). Measured on the gate fixture (kIvf=100,
    * A=2 vs the single-assign kIvf=25/nprobe=10 point): refined
    * recall@10 0.94 @ scan 0.539 (nprobe 18, rf 3) and 0.91 @ 0.465
    * (nprobe 14) vs 0.81 @ 0.544 — better on both axes, pinned by
@@ -1035,22 +817,6 @@ object SimilaritySearch {
       assignAgainstL2TopA(cents, embs, idCol, vecCol, a),
       cb, pqCodesSub(embs, idCol, vecCol, cb, m, subDim))
   }
-
-  /** Delta append against a STORED spilled trained index — the q134
-    * incremental-maintenance discipline for this family: assign (top-A)
-    * and PQ-encode ONLY the new vectors against the stored
-    * centroids/codebook (work ∝ delta; the corpus is never re-read or
-    * re-encoded). Returns the delta's (assignments, codes) to land as
-    * new generations (the idempotentBatchWriter batch_id layout);
-    * because assignments and codes are per-vector pure functions of the
-    * stored quantizers, base ∪ delta ≡ the full one-shot build
-    * (`SpilledServingSpec` pins it). */
-  def ivfPqAppendTrainedSpilled(index: IvfPqTrainedIndex,
-                                delta: DataFrame, idCol: Column,
-                                vecCol: Column, a: Int, m: Int,
-                                subDim: Int): (DataFrame, DataFrame) =
-    (assignAgainstL2TopA(index.centroids, delta, idCol, vecCol, a),
-      pqCodesSub(delta, idCol, vecCol, index.codebook, m, subDim))
 
   /** Two-stage serving over a SPILLED trained index: probed lists →
     * member ids DEDUPED (a vector whose multiple home lists are all
@@ -1095,22 +861,12 @@ object SimilaritySearch {
    * itself (m·k·subDim), and a once-per-corpus-version index pass.
    *
    * Returns (R rows as a Seq[Seq[Double]] — R(i) is output-dim i's
-   * weight row — and the codebook trained on the FINAL rotation).
+   * weight row —, the codebook trained on the FINAL rotation, and the
+   * FIRST alternation's codebook). Iteration 0 rotates by the identity,
+   * so its codebook IS the flat per-subspace PQ codebook trained on the
+   * SAME sample with the SAME trainer — the comparison baseline (q210)
+   * at zero extra fits.
    */
-  def opqTrain(embs: DataFrame, idCol: Column, vecCol: Column,
-               m: Int, subDim: Int, kSub: Int, iters: Int = 3,
-               seed: Long = 42L, trainFrac: Double = 1.0,
-               fitMaxIter: Int = 20, fitInitMode: String = "k-means||")
-      : (Seq[Seq[Double]], DataFrame) = {
-    val (r, cb, _) = opqTrainWithFlat(embs, idCol, vecCol, m, subDim,
-      kSub, iters, seed, trainFrac, fitMaxIter, fitInitMode)
-    (r, cb)
-  }
-
-  /** [[opqTrain]] exposing the FIRST alternation's codebook as well:
-    * iteration 0 rotates by the identity, so its codebook IS the flat
-    * per-subspace PQ codebook trained on the SAME sample with the SAME
-    * trainer — the comparison baseline (q210) at zero extra fits. */
   def opqTrainWithFlat(embs: DataFrame, idCol: Column, vecCol: Column,
                        m: Int, subDim: Int, kSub: Int, iters: Int = 3,
                        seed: Long = 42L, trainFrac: Double = 1.0,
@@ -1153,8 +909,7 @@ object SimilaritySearch {
         // replaces (4096 interpreted multiplies/row at d=64), so the
         // explode positions and the per-cell sums are unchanged
         val cells = train.join(xhat, "id")
-          .select(posexplode(graft.functions.VectorFunctions.outerFlat(
-            col("xhat"), col("v"))))
+          .select(posexplode(outerFlat(col("xhat"), col("v"))))
           .groupBy("pos").agg(sum("col").as("c"))
           .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
         val mMat = breeze.linalg.DenseMatrix.tabulate(d, d)(
@@ -1167,10 +922,10 @@ object SimilaritySearch {
       // returned codebook is a local row set — the rotated frame's
       // blocks free on EVERY path (a per-iteration leak would pin
       // iters × sample in the block manager)
-      org.apache.spark.sql.graftshim.GraftShim.freeLocalCheckpoint(rot)
+      GraftShim.freeLocalCheckpoint(rot)
       it += 1
     }
-    org.apache.spark.sql.graftshim.GraftShim.freeLocalCheckpoint(train)
+    GraftShim.freeLocalCheckpoint(train)
     (r, cb, cbFlat)
   }
 
@@ -1184,9 +939,7 @@ object SimilaritySearch {
   def rotated(vecCol: Column, r: Seq[Seq[Double]], d: Int): Column = {
     require(r.length == d, s"rotation is ${r.length}x?, expected $d")
     coalesce(
-      org.apache.spark.sql.graftshim.GraftShim.column(
-        graft.functions.ArrayMatVec(
-          org.apache.spark.sql.graftshim.GraftShim.expr(vecCol), r)),
+      GraftShim.column(graft.functions.ArrayMatVec(GraftShim.expr(vecCol), r)),
       array_repeat(lit(null).cast("double"), d))
   }
 
@@ -1220,10 +973,8 @@ object SimilaritySearch {
     * THE stage-0 expression, evaluated once per corpus vector per
     * query). */
   def hammingDistance(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftshim.GraftShim.column(
-      graft.functions.ArrayHammingSum(
-        org.apache.spark.sql.graftshim.GraftShim.expr(a),
-        org.apache.spark.sql.graftshim.GraftShim.expr(b)))
+    GraftShim.column(graft.functions.ArrayHammingSum(GraftShim.expr(a),
+      GraftShim.expr(b)))
 
   /** The driver-side twin of [[binarySignCode]] for a literal query
     * vector. */
@@ -1250,38 +1001,48 @@ object SimilaritySearch {
       Seq(col("hamming").asc, col("id").asc), k)
   }
 
-  /** The binary serving composition: xor/popcount shortlist of
-    * R = `refineFactor`·k (the 256×-compressed scan), exact-cosine
-    * re-rank of only those R raw vectors ([[refineTopK]]) — the
-    * standard two-stage binary-embedding retrieval. */
-  def binaryRefinedTopK(embs: DataFrame, idCol: Column, vecCol: Column,
-                        query: Seq[Double], dims: Int, k: Int,
-                        refineFactor: Int = 10): DataFrame = {
-    require(refineFactor >= 1, s"refineFactor must be >= 1 (got $refineFactor)")
-    refineTopK(embs, idCol, vecCol,
-      binaryHammingTopK(embs, idCol, vecCol, query, dims,
-        refineFactor * k),
-      query, k)
+  /** The stored-index layout: one parquet frame per artifact, named
+    * after the [[IvfPqTrainedIndex]] field, under one index directory —
+    * what [[readIndex]], [[eraseFromStoredIndex]] and the q204 oracle
+    * read. */
+  private val IndexFrames = Seq("centroids", "assignments", "codebook",
+    "codes")
+
+  /** Persist an index's four frames under `indexDir` (overwriting) and
+    * return the index read back from storage — the artifact a serving
+    * cluster loads, so every search over the result exercises the
+    * parquet roundtrip. */
+  private[graft] def storeIndex(index: IvfPqTrainedIndex,
+                                indexDir: String): IvfPqTrainedIndex = {
+    IndexFrames.zip(Seq(index.centroids, index.assignments, index.codebook,
+        index.codes))
+      .foreach { case (name, df) =>
+        df.write.mode("overwrite").parquet(s"$indexDir/$name")
+      }
+    readIndex(index.centroids.sparkSession, indexDir)
+  }
+
+  /** The index stored under `indexDir` by [[storeIndex]]. */
+  private[graft] def readIndex(spark: SparkSession,
+                               indexDir: String): IvfPqTrainedIndex = {
+    val Seq(centroids, assignments, codebook, codes) =
+      IndexFrames.map(name => spark.read.parquet(s"$indexDir/$name"))
+    IvfPqTrainedIndex(centroids, assignments, codebook, codes)
   }
 
   /**
    * FAISS `remove_ids` for the STORED index — the right-to-erasure
    * path for serving artifacts ([[graft.app.CurationRunner]]'s
-   * physical-erasure contract applied to the index a corpus version
-   * ships): delete the subject vectors' rows from every id-keyed
-   * artifact under `indexDir` via the file-targeted
-   * [[graft.sources.Layout.deleteWhere]] rewrite — untouched files
-   * keep their bytes, and min/max pruning decides which files are
-   * read at all, so at 100 TB with id-sorted codes the rewrite
-   * touches O(subjects) files, never the corpus. Centroids and
-   * codebooks are TRAINED PARAMETERS, not rows about a subject: they
-   * keep their values (retrain at the next corpus version when the
-   * parameters themselves must forget — the same boundary as the
-   * erase() aggregated-derivatives note). Post-erasure serving is
-   * EXACT: assignment and encode are per-vector facts, so the erased
-   * store is row-identical to an index built over the complement
-   * corpus with the same parameters, and no erased id can be returned
-   * by any probe (spec-pinned; oracle-gated as q215).
+   * physical-erasure contract): delete the subject vectors' rows from
+   * every id-keyed artifact under `indexDir` via the file-targeted
+   * [[graft.sources.Layout.deleteWhere]] rewrite, which touches
+   * O(subjects) files, never the corpus. Centroids and codebooks are
+   * TRAINED PARAMETERS, not rows about a subject: they keep their
+   * values until the next corpus version retrains them. Post-erasure
+   * serving is EXACT: assignment and encode are per-vector facts, so
+   * the erased store is row-identical to an index built over the
+   * complement corpus with the same parameters (spec-pinned;
+   * oracle-gated as q215).
    *
    * `frames` names the id-keyed artifacts to rewrite. A frame absent
    * under `indexDir` is skipped only when `optional` names it — a
@@ -1340,45 +1101,9 @@ object SimilaritySearch {
     val shortVecs = ev.join(broadcast(short0.select("id")), Seq("id"),
       "left_semi")
     val codes = pqCodesSub(shortVecs, col("id"), col("v"), codebookSub,
-      m, subDim).withColumnRenamed("cid", "code")
-    val qLit = array(query.map(lit): _*)
-    val qd = codebookSub.select(col("s"), col("cid").as("code"),
-      graft.functions.VectorFunctions.sqDist(
-        slice(qLit, col("s") * subDim + 1, lit(subDim)),
-        col("cvs")).as("dq"))
-    val dCols = (0 until m).map(i =>
-      max(when(col("s") === i, col("dq"))).as(s"d$i"))
-    val adc = codes.join(broadcast(qd), Seq("s", "code"))
-      .groupBy("id").agg(dCols.head, dCols.tail: _*)
-      .withColumn("adcd",
-        (0 until m).map(i => col(s"d$i")).reduce(_ + _))
-    val adcShort = TopK.globalTopK(adc.select(col("id"), col("adcd")),
-      Seq(col("adcd").asc, col("id").asc), refineFactor * k)
-    refineTopK(ev, col("id"), col("v"), adcShort, query, k)
-  }
-
-  /** Per-list ADC tail shared by the trained residual path: join codes
-    * (id, s, cid ← code, cid list) to per-(list, s, code) query-residual
-    * distances, fixed-order sum, top-k. */
-  private def adcResidualTail(codes: DataFrame, qres: DataFrame,
-                              codebookSub: DataFrame, m: Int, subDim: Int,
-                              k: Int): DataFrame = {
-    val qd = qres
-      .crossJoin(broadcast(codebookSub.withColumnRenamed("cid", "code")))
-      .select(col("cid"), col("s"), col("code"),
-        graft.functions.VectorFunctions.sqDist(
-          slice(col("qr"), col("s") * subDim + 1, lit(subDim)),
-          col("cvs")).as("dq"))
-    val aggs = max(col("cid")).as("list_cid") +:
-      (0 until m).map(i => max(when(col("s") === i, col("dq"))).as(s"d$i"))
-    val adc = codes
-      .join(broadcast(qd), Seq("cid", "s", "code"))
-      .groupBy("id").agg(aggs.head, aggs.tail: _*)
-    val total = (0 until m).map(i => col(s"d$i")).reduce(_ + _)
-    TopK.globalTopK(
-        adc.select(col("id"), col("list_cid"),
-          round(total, 6).as("adc_dist"), total.as("_t")),
-        Seq(col("_t").asc, col("id").asc), k)
-      .drop("_t")
+      m, subDim)
+    refineTopK(ev, col("id"), col("v"),
+      adcTopKSub(codes, codebookSub, query, m, subDim, refineFactor * k),
+      query, k)
   }
 }

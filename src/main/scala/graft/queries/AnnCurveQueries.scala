@@ -50,19 +50,14 @@ object AnnCurveQueries {
   def curve(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.loadSpread(s, dir, "embeddings")
     // ONE index, stored and read back (the q158 stored-frame contract)
-    val idx = SimilaritySearch.ivfPqIndex(e, col("vec_id"),
-      col("embedding"), IvfModulus, PqModulus, M, SubDim)
-    val out = Scratch.path(s, "q203")
-    idx.ivf.centroids.write.mode("overwrite").parquet(s"$out/centroids")
-    idx.ivf.assignments.write.mode("overwrite").parquet(s"$out/assignments")
-    idx.codebook.write.mode("overwrite").parquet(s"$out/codebook")
-    idx.codes.write.mode("overwrite").parquet(s"$out/codes")
-    val cents = s.read.parquet(s"$out/centroids")
-    val assign = s.read.parquet(s"$out/assignments").select("id", "cid")
-    val cb = s.read.parquet(s"$out/codebook")
-      .select(col("cid").as("code"), col("cv"))
-    val codes = s.read.parquet(s"$out/codes")
-      .select(col("id"), col("s"), col("cid").as("code"))
+    val idx = SimilaritySearch.storeIndex(
+      SimilaritySearch.ivfPqIndex(e, col("vec_id"), col("embedding"),
+        IvfModulus, PqModulus, M, SubDim),
+      Scratch.path(s, "q203"))
+    val cents = idx.centroids
+    val assign = idx.assignments.select("id", "cid")
+    val cb = idx.codebook.select(col("s"), col("cid").as("code"), col("cvs"))
+    val codes = idx.codes.select(col("id"), col("s"), col("cid").as("code"))
 
     val q = e.filter(pmod(col("vec_id"), lit(50)) === 7)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
@@ -105,13 +100,13 @@ object AnnCurveQueries {
     // ADC lookup table: (qid, s, code) → query→sub-centroid distance
     val dq = q.select(col("qid"), col("qv"),
         explode(sequence(lit(0), lit(M - 1))).as("s"))
-      .crossJoin(broadcast(cb))
+      .join(broadcast(cb), Seq("s"))
       .select(col("qid"), col("s"), col("code"),
         VectorFunctions.sqDist(
           slice(col("qv"), col("s") * SubDim + 1, lit(SubDim)),
-          slice(col("cv"), col("s") * SubDim + 1, lit(SubDim))).as("dq"))
+          col("cvs")).as("dq"))
     // the ADC distance ONCE per candidate pair; fixed-order d0+..+d(M-1)
-    // derived from M (the adcTopK discipline: order-invariant, and the
+    // derived from M (the adcTopKSub discipline: order-invariant, and the
     // term list tracks the constant instead of hardcoding four)
     val dCols = (0 until M).map(i =>
       max(when(col("s") === i, col("dq"))).as(s"d$i"))
@@ -233,23 +228,17 @@ object AnnCurveQueries {
     // corpus, and the oracle is unaffected because it replays from the
     // STORED centroids/codebook whatever sample trained them
     val trainFrac = if (n <= 2048L) 1.0 else 2048.0 / n
-    val idx = SimilaritySearch.ivfPqIndexTrainedSpilled(e, col("vec_id"),
-      col("embedding"), SpillKIvf, SpillA, SpillKSub, SpillM, SpillSubDim,
-      trainFrac = trainFrac)
-    val out = spillOut(dir)
     // the path is (SF, pid)-private — no concurrent session can write
     // it, so a plain overwrite publish is race-free by construction
-    Seq("centroids" -> idx.centroids, "codebook" -> idx.codebook,
-      "assignments" -> idx.assignments, "codes" -> idx.codes)
-      .foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$out/$name")
-      }
-    val cents = s.read.parquet(s"$out/centroids")
-    val assign = s.read.parquet(s"$out/assignments").select("id", "cid")
-    val cb = s.read.parquet(s"$out/codebook")
-      .select(col("s"), col("cid").as("code"), col("cvs"))
-    val codes = s.read.parquet(s"$out/codes")
-      .select(col("id"), col("s"), col("cid").as("code"))
+    val idx = SimilaritySearch.storeIndex(
+      SimilaritySearch.ivfPqIndexTrainedSpilled(e, col("vec_id"),
+        col("embedding"), SpillKIvf, SpillA, SpillKSub, SpillM, SpillSubDim,
+        trainFrac = trainFrac),
+      spillOut(dir))
+    val cents = idx.centroids
+    val assign = idx.assignments.select("id", "cid")
+    val cb = idx.codebook.select(col("s"), col("cid").as("code"), col("cvs"))
+    val codes = idx.codes.select(col("id"), col("s"), col("cid").as("code"))
 
     def l2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       VectorFunctions.sqDist(a, b)

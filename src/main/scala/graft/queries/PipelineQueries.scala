@@ -279,20 +279,10 @@ object PipelineQueries {
       // the oracle IS q141's SQL — the stored path must reproduce the
       // inline path row-for-row through the roundtrip.
       val e = Tables.loadSpread(s, dir, "embeddings")
-      val idx = SimilaritySearch.ivfPqIndex(e, col("vec_id"),
-        col("embedding"), ivfModulus = 200, pqModulus = 100, m = 4,
-        subDim = 16)
-      val out = "/tmp/graft_ivfpq_q143"
-      idx.ivf.centroids.write.mode("overwrite").parquet(s"$out/centroids")
-      idx.ivf.assignments.write.mode("overwrite").parquet(s"$out/assignments")
-      idx.codebook.write.mode("overwrite").parquet(s"$out/codebook")
-      idx.codes.write.mode("overwrite").parquet(s"$out/codes")
-      val stored = SimilaritySearch.IvfPqIndex(
-        SimilaritySearch.IvfIndex(
-          s.read.parquet(s"$out/centroids"),
-          s.read.parquet(s"$out/assignments")),
-        s.read.parquet(s"$out/codebook"),
-        s.read.parquet(s"$out/codes"))
+      val stored = SimilaritySearch.storeIndex(
+        SimilaritySearch.ivfPqIndex(e, col("vec_id"), col("embedding"),
+          ivfModulus = 200, pqModulus = 100, m = 4, subDim = 16),
+        "/tmp/graft_ivfpq_q143")
       val q = e.filter(col("vec_id") === 0).select("embedding")
         .head.getSeq[Float](0).map(_.toDouble)
       SimilaritySearch.ivfPqTopKFromIndex(stored, q, nprobe = 2, m = 4,
@@ -315,32 +305,24 @@ object PipelineQueries {
       // Centroids/codebook keep their trained values by contract
       // (eraseFromStoredIndex scaladoc).
       val e = Tables.loadSpread(s, dir, "embeddings")
-      val idx = SimilaritySearch.ivfPqIndex(e, col("vec_id"),
-        col("embedding"), ivfModulus = 200, pqModulus = 100, m = 4,
-        subDim = 16)
       val out = Scratch.path(s, "q215")
-      idx.ivf.centroids.write.mode("overwrite").parquet(s"$out/centroids")
-      idx.ivf.assignments.write.mode("overwrite")
-        .parquet(s"$out/assignments")
-      idx.codebook.write.mode("overwrite").parquet(s"$out/codebook")
-      idx.codes.write.mode("overwrite").parquet(s"$out/codes")
-      def readIndex() = SimilaritySearch.IvfPqIndex(
-        SimilaritySearch.IvfIndex(
-          s.read.parquet(s"$out/centroids"),
-          s.read.parquet(s"$out/assignments")),
-        s.read.parquet(s"$out/codebook"),
-        s.read.parquet(s"$out/codes"))
+      val stored = SimilaritySearch.storeIndex(
+        SimilaritySearch.ivfPqIndex(e, col("vec_id"), col("embedding"),
+          ivfModulus = 200, pqModulus = 100, m = 4, subDim = 16),
+        out)
       val q = e.filter(col("vec_id") === 0).select("embedding")
         .head.getSeq[Float](0).map(_.toDouble)
       // top-3 then drop the self-match: equals "top-2 excluding the
       // query" whether or not the query ranks inside the top 3
-      val subjects = SimilaritySearch.ivfPqTopKFromIndex(readIndex(), q,
+      val subjects = SimilaritySearch.ivfPqTopKFromIndex(stored, q,
           nprobe = 2, m = 4, subDim = 16, k = 3)
         .filter(col("id") =!= 0).orderBy("rank").limit(2)
         .select("id").collect().map(_.getLong(0)).toSeq
       SimilaritySearch.eraseFromStoredIndex(s, out, subjects)
-      SimilaritySearch.ivfPqTopKFromIndex(readIndex(), q, nprobe = 2,
-          m = 4, subDim = 16, k = 10)
+      // read the store again: the erasure rewrote files under `out`
+      SimilaritySearch.ivfPqTopKFromIndex(
+          SimilaritySearch.readIndex(s, out), q, nprobe = 2, m = 4,
+          subDim = 16, k = 10)
         .select(col("id"), col("c0"), col("c1"), col("c2"), col("c3"),
           col("adc_dist"), col("rank").cast("bigint").as("rank"))
         .orderBy("rank")
@@ -377,20 +359,10 @@ object PipelineQueries {
       // must reproduce the inline shortlist through the roundtrip, and
       // the refine tail is metric-exact.
       val e = Tables.loadSpread(s, dir, "embeddings")
-      val idx = SimilaritySearch.ivfPqIndex(e, col("vec_id"),
-        col("embedding"), ivfModulus = 200, pqModulus = 100, m = 4,
-        subDim = 16)
-      val out = "/tmp/graft_ivfpq_q158"
-      idx.ivf.centroids.write.mode("overwrite").parquet(s"$out/centroids")
-      idx.ivf.assignments.write.mode("overwrite").parquet(s"$out/assignments")
-      idx.codebook.write.mode("overwrite").parquet(s"$out/codebook")
-      idx.codes.write.mode("overwrite").parquet(s"$out/codes")
-      val stored = SimilaritySearch.IvfPqIndex(
-        SimilaritySearch.IvfIndex(
-          s.read.parquet(s"$out/centroids"),
-          s.read.parquet(s"$out/assignments")),
-        s.read.parquet(s"$out/codebook"),
-        s.read.parquet(s"$out/codes"))
+      val stored = SimilaritySearch.storeIndex(
+        SimilaritySearch.ivfPqIndex(e, col("vec_id"), col("embedding"),
+          ivfModulus = 200, pqModulus = 100, m = 4, subDim = 16),
+        "/tmp/graft_ivfpq_q158")
       val q = e.filter(col("vec_id") === 0).select("embedding")
         .head.getSeq[Float](0).map(_.toDouble)
       SimilaritySearch.ivfPqTopKRefinedFromIndex(stored, e, col("vec_id"),
@@ -884,50 +856,17 @@ object PipelineQueries {
       // modulus-sampled vectors (the q72 IVF discipline, oracle-exact);
       // codes = per-subspace L2 argmin over the BROADCAST codebook, so
       // encoding is scan-local — no shuffle until the final top-k.
-      import org.apache.spark.sql.Column
       val e = Tables.loadSpread(s, dir, "embeddings")
         .select("vec_id", "embedding")
-      val cent = e.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
       val qv = e.filter(col("vec_id") === 0).select("embedding")
         .head.getSeq[Float](0).map(_.toDouble)
-      // (x-y)*(x-y), not pow(_,2): multiplication is bit-identical across
-      // engines; widen floats BEFORE subtraction (float−float stays
-      // float32 and drifts off the double oracle)
-      def l2sq(a: Column, b: Column): Column =
-        graft.functions.VectorFunctions.sqDist(a, b)
-      def subv(v: Column): Column = slice(v, col("s") * 16 + 1, lit(16))
-      val dist = e
-        .select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0), lit(3))).as("s"))
-        .crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("s"), col("cid"),
-          l2sq(subv(col("embedding")), subv(col("cv"))).as("d"))
-      val codes = graft.operators.TopK.topKPerGroup(dist,
-        Seq(col("vec_id"), col("s")), Seq(col("d").asc, col("cid").asc), 1)
-      // ADC lookup table: query→centroid distance per (subspace, code) —
-      // m×k rows, broadcast to every executor
-      val dq = cent
-        .select(col("cid"), col("cv"),
-          explode(sequence(lit(0), lit(3))).as("s"))
-        .select(col("s"), col("cid"),
-          l2sq(subv(typedlit(qv)), subv(col("cv"))).as("dq"))
-      // fixed-order d0+d1+d2+d3 (not sum()): bit-identical across engines
-      val aggs = (0 to 3).map(i =>
-          max(when(col("s") === i, col("cid"))).as(s"c$i")) ++
-        (0 to 3).map(i =>
-          max(when(col("s") === i, col("dq"))).as(s"d$i"))
-      val adc = codes.join(broadcast(dq), Seq("s", "cid"))
-        .groupBy("vec_id")
-        .agg(aggs.head, aggs.tail: _*)
-      val total = col("d0") + col("d1") + col("d2") + col("d3")
-      // globalTopK = orderBy+limit (distributed take-ordered), THEN rank
-      // the k survivors — never a global row_number window over all rows
-      graft.operators.TopK.globalTopK(
-          adc.select(col("vec_id").as("id"), col("c0"), col("c1"),
-            col("c2"), col("c3"), round(total, 6).as("adc_dist"),
-            total.as("_t")),
-          Seq(col("_t").asc, col("id").asc), 10)
+      val cb = SimilaritySearch.pqCodebook(e, col("vec_id"),
+        col("embedding"), modulus = 100, m = 4, subDim = 16)
+      val codes = SimilaritySearch.pqCodesSub(e, col("vec_id"),
+        col("embedding"), cb, m = 4, subDim = 16)
+      // ADC lookup table (m×k broadcast rows), fixed-order d0+…+d3 sum,
+      // take-ordered top-k — never a global window over all rows
+      SimilaritySearch.adcTopKSub(codes, cb, qv, m = 4, subDim = 16, k = 10)
         .select(col("id"), col("c0"), col("c1"), col("c2"), col("c3"),
           col("adc_dist"), col("rank").cast("bigint").as("rank"))
         .orderBy("rank")

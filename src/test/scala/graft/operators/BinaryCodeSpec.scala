@@ -35,9 +35,9 @@ class BinaryCodeSpec extends SparkSpec {
       s"expected ${flips.size} flipped bits, measured $ham")
   }
 
-  test("binaryRefinedTopK: with a full-coverage shortlist the two-stage " +
-      "composition IS exact cosine top-k; with a tight shortlist every " +
-      "hit comes from the hamming stage, exact-ordered") {
+  test("hamming shortlist + refineTopK: with a full-coverage shortlist " +
+      "the two-stage composition IS exact cosine top-k; with a tight " +
+      "shortlist every hit comes from the hamming stage, exact-ordered") {
     import graft.functions.VectorFunctions
     val dims = 64
     val rnd = new scala.util.Random(23)
@@ -51,16 +51,19 @@ class BinaryCodeSpec extends SparkSpec {
           VectorFunctions.unit(qArr)).as("cos")),
       Seq(col("cos").desc, col("id").asc), 5)
       .collect().map(_.getLong(0)).toSeq
-    // rf*k = 40 >= n: shortlist covers the corpus -> exact top-k
-    val full = SimilaritySearch.binaryRefinedTopK(df, col("id"), col("v"),
-      q, dims, k = 5, refineFactor = 8).collect()
+    def twoStage(shortlist: Int) = SimilaritySearch.refineTopK(df,
+      col("id"), col("v"),
+      SimilaritySearch.binaryHammingTopK(df, col("id"), col("v"), q, dims,
+        shortlist),
+      q, k = 5).collect()
+    // shortlist 40 >= n: covers the corpus -> exact top-k
+    val full = twoStage(40)
     assert(full.map(_.getLong(0)).toSeq == brute)
     // tight shortlist: every returned id must be in the hamming top-10,
     // ordered by exact cosine desc
     val short = SimilaritySearch.binaryHammingTopK(df, col("id"), col("v"),
       q, dims, k = 10).collect().map(_.getLong(0)).toSet
-    val tight = SimilaritySearch.binaryRefinedTopK(df, col("id"), col("v"),
-      q, dims, k = 5, refineFactor = 2).collect()
+    val tight = twoStage(10)
     assert(tight.length == 5)
     tight.foreach(r => assert(short.contains(r.getLong(0))))
     val cosSeq = tight.map(_.getAs[Double]("cosine")).toSeq

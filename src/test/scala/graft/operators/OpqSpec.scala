@@ -80,8 +80,8 @@ class OpqSpec extends SparkSpec {
 
   test("learned rotation is orthogonal and rotated() preserves L2 " +
       "geometry (the invariant ADC-in-rotated-space relies on)") {
-    val (r, _) = SimilaritySearch.opqTrain(frame, col("id"), col("v"),
-      M, SubDim, KSub, iters = 2)
+    val (r, _, _) = SimilaritySearch.opqTrainWithFlat(frame, col("id"),
+      col("v"), M, SubDim, KSub, iters = 2)
     // R·Rᵀ = I
     val rm = breeze.linalg.DenseMatrix.tabulate(D, D)((i, j) => r(i)(j))
     val ident = rm * rm.t
@@ -116,8 +116,8 @@ class OpqSpec extends SparkSpec {
     val cbFlat = SimilaritySearch.pqCodebookSubKMeans(frame, col("id"),
       col("v"), M, SubDim, KSub)
     val flat = adcRecall(frame, queries, cbFlat)
-    val (r, cbOpq) = SimilaritySearch.opqTrain(frame, col("id"), col("v"),
-      M, SubDim, KSub, iters = 4)
+    val (r, cbOpq, _) = SimilaritySearch.opqTrainWithFlat(frame, col("id"),
+      col("v"), M, SubDim, KSub, iters = 4)
     val fr = frame.select(col("id"),
       SimilaritySearch.rotated(col("v"), r, D).as("v"))
     val opq = adcRecall(fr,

@@ -21,16 +21,6 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(out.head.getDouble(1) == 1.0)
   }
 
-  test("lshTopK agrees with brute force when buckets align (self-query)") {
-    val q = Seq(1.0, 0.0, 0.0)
-    val brute = SimilaritySearch.bruteForceTopK(embs, col("vec_id"),
-      col("embedding"), q, 1).head.getLong(0)
-    val ann = SimilaritySearch.lshTopK(embs, col("vec_id"), col("embedding"),
-      q, dims = 3, planes = 2, k = 1).collect()
-    // the true NN shares the query's bucket by construction here
-    assert(ann.nonEmpty && ann.head.getLong(0) == brute)
-  }
-
   test("lshBuckets is deterministic and stable across invocations") {
     val b1 = SimilaritySearch.lshBuckets(embs, col("vec_id"), col("embedding"), 3, 4)
       .select("id", "bucket").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -161,14 +151,18 @@ class SimilaritySearchSpec extends SparkSpec {
   test("pqCodes (argmax partial agg) equals the window-rank argmin " +
       "formulation and is deterministic across invocations") {
     val e = realEmbs.limit(100)
+    // the modulus codebook in the per-subspace (s, cid, cvs) frame
     val cb = SimilaritySearch.pqCodebook(realEmbs, col("vec_id"),
-      col("embedding"), 100)
+      col("embedding"), modulus = 100, m = 4, subDim = 16)
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[Int]("s")) -> r.getAs[Long]("cid"))
       .toMap
-    val viaAgg = asMap(SimilaritySearch.pqCodes(e, col("vec_id"),
+    val viaAgg = asMap(SimilaritySearch.pqCodesSub(e, col("vec_id"),
       col("embedding"), cb, m = 4, subDim = 16))
-    // q85's original formulation: explode × codebook, window rank 1
+    // q85's original formulation: explode × the RAW modulus vectors
+    // (cid, cv), both sides sliced per subspace, window rank 1
+    val raw = realEmbs.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
     def l2sq(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => {
         val d = x.cast("double") - y.cast("double"); d * d
@@ -178,13 +172,13 @@ class SimilaritySearchSpec extends SparkSpec {
     val viaWindow = asMap(TopK.topKPerGroup(
       e.select(col("vec_id").as("id"), col("embedding"),
           explode(sequence(lit(0), lit(3))).as("s"))
-        .crossJoin(broadcast(cb))
+        .crossJoin(broadcast(raw))
         .select(col("id"), col("s"), col("cid"),
           l2sq(subv(col("embedding")), subv(col("cv"))).as("d")),
       Seq(col("id"), col("s")), Seq(col("d").asc, col("cid").asc), 1)
       .select("id", "s", "cid"))
     assert(viaAgg === viaWindow)
-    assert(viaAgg === asMap(SimilaritySearch.pqCodes(e, col("vec_id"),
+    assert(viaAgg === asMap(SimilaritySearch.pqCodesSub(e, col("vec_id"),
       col("embedding"), cb, m = 4, subDim = 16)))
   }
 
@@ -256,17 +250,10 @@ class SimilaritySearchSpec extends SparkSpec {
     val inline = rows(SimilaritySearch.ivfPqTopK(e, col("vec_id"),
       col("embedding"), q, ivfModulus = 200, nprobe = 2, pqModulus = 100,
       m = 4, subDim = 16, k = 10))
-    val idx = SimilaritySearch.ivfPqIndex(e, col("vec_id"),
-      col("embedding"), ivfModulus = 200, pqModulus = 100, m = 4, subDim = 16)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    idx.ivf.centroids.write.parquet(s"$dir/c")
-    idx.ivf.assignments.write.parquet(s"$dir/a")
-    idx.codebook.write.parquet(s"$dir/cb")
-    idx.codes.write.parquet(s"$dir/codes")
-    val stored = SimilaritySearch.IvfPqIndex(
-      SimilaritySearch.IvfIndex(
-        spark.read.parquet(s"$dir/c"), spark.read.parquet(s"$dir/a")),
-      spark.read.parquet(s"$dir/cb"), spark.read.parquet(s"$dir/codes"))
+    val stored = SimilaritySearch.storeIndex(
+      SimilaritySearch.ivfPqIndex(e, col("vec_id"), col("embedding"),
+        ivfModulus = 200, pqModulus = 100, m = 4, subDim = 16),
+      java.nio.file.Files.createTempDirectory("ivfpq").toString)
     assert(rows(SimilaritySearch.ivfPqTopKFromIndex(stored, q, nprobe = 2,
       m = 4, subDim = 16, k = 10)) === inline)
     // delta discipline: corpus-built artifacts + delta assigned/encoded
@@ -277,12 +264,13 @@ class SimilaritySearchSpec extends SparkSpec {
     val delta = e.filter(pmod(col("vec_id"), lit(5)) === 3)
     val cIdx = SimilaritySearch.ivfPqIndex(corpus, col("vec_id"),
       col("embedding"), ivfModulus = 200, pqModulus = 100, m = 4, subDim = 16)
-    val appended = SimilaritySearch.IvfPqIndex(
-      SimilaritySearch.ivfAppend(cIdx.ivf, delta, col("vec_id"),
-        col("embedding")),
+    val appended = SimilaritySearch.IvfPqTrainedIndex(cIdx.centroids,
+      cIdx.assignments.unionByName(SimilaritySearch.assignAgainst(
+        cIdx.centroids, delta, col("vec_id"), col("embedding"))),
       cIdx.codebook,
-      cIdx.codes.unionByName(SimilaritySearch.pqCodes(delta, col("vec_id"),
-        col("embedding"), cIdx.codebook, m = 4, subDim = 16)))
+      cIdx.codes.unionByName(SimilaritySearch.pqCodesSub(delta,
+        col("vec_id"), col("embedding"), cIdx.codebook, m = 4,
+        subDim = 16)))
     assert(rows(SimilaritySearch.ivfPqTopKFromIndex(appended, q, nprobe = 2,
       m = 4, subDim = 16, k = 10)) === inline)
   }
@@ -296,10 +284,7 @@ class SimilaritySearchSpec extends SparkSpec {
       col("embedding"), ivfModulus = 200, pqModulus = 100, m = 4,
       subDim = 16)
     val dir = java.nio.file.Files.createTempDirectory("idx-erase").toString
-    idx.ivf.centroids.write.parquet(s"$dir/centroids")
-    idx.ivf.assignments.write.parquet(s"$dir/assignments")
-    idx.codebook.write.parquet(s"$dir/codebook")
-    idx.codes.write.parquet(s"$dir/codes")
+    SimilaritySearch.storeIndex(idx, dir)
     val centRowsBefore = spark.read.parquet(s"$dir/centroids").count()
     val cbRowsBefore = spark.read.parquet(s"$dir/codebook").count()
     // 200 is a centroid-source id: the VECTOR's rows erase, the trained
@@ -329,13 +314,9 @@ class SimilaritySearchSpec extends SparkSpec {
       df.select("id", "adc_dist", "rank").collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
         .sortBy(_._3)
-    val erasedStore = SimilaritySearch.IvfPqIndex(
-      SimilaritySearch.IvfIndex(
-        spark.read.parquet(s"$dir/centroids"), aAfter),
-      spark.read.parquet(s"$dir/codebook"), cAfter)
-    val logical = SimilaritySearch.IvfPqIndex(
-      SimilaritySearch.IvfIndex(idx.ivf.centroids,
-        idx.ivf.assignments.filter(!col("id").isin(subjects: _*))),
+    val erasedStore = SimilaritySearch.readIndex(spark, dir)
+    val logical = SimilaritySearch.IvfPqTrainedIndex(idx.centroids,
+      idx.assignments.filter(!col("id").isin(subjects: _*)),
       idx.codebook, idx.codes.filter(!col("id").isin(subjects: _*)))
     val served = rows(SimilaritySearch.ivfPqTopKFromIndex(erasedStore, q,
       nprobe = 2, m = 4, subDim = 16, k = 10))
@@ -346,7 +327,7 @@ class SimilaritySearchSpec extends SparkSpec {
     // would report an erasure that never happened
     val partial = java.nio.file.Files.createTempDirectory("idx-part")
       .toString
-    idx.ivf.assignments.write.parquet(s"$partial/assignments")
+    idx.assignments.write.parquet(s"$partial/assignments")
     val err = intercept[IllegalArgumentException] {
       SimilaritySearch.eraseFromStoredIndex(spark, partial, Seq(1L))
     }
@@ -446,80 +427,39 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(centers(trainedFixture.repartition(13)) === base)
   }
 
-  test("ivfPqTopKTrained: k rows of corpus ids, deterministic across " +
-    "partition layouts") {
-    val q = trainedFixture.filter(col("vec_id") === 0).select("embedding")
-      .head.getSeq[Float](0).map(_.toDouble)
-    def run(df: org.apache.spark.sql.DataFrame) =
-      SimilaritySearch.ivfPqTopKTrained(df, col("vec_id"),
-          col("embedding"), q, kIvf = 4, nprobe = 2, kSub = 8, m = 2,
-          subDim = 4, k = 5)
-        .orderBy("rank").collect()
-        .map(r => (r.getAs[Long]("id"), r.getAs[Double]("adc_dist"))).toSeq
-    val base = run(trainedFixture)
-    assert(base.size == 5)
-    assert(base.map(_._1).distinct.size == 5)
-    assert(base.map(_._1).forall(id => id >= 0 && id < 400))
-    assert(run(trainedFixture.repartition(13)) === base)
-  }
-
-  test("ivfPqResidualTopKTrained: k rows, deterministic across layouts, " +
-    "ADC distances non-negative") {
-    val q = trainedFixture.filter(col("vec_id") === 0).select("embedding")
-      .head.getSeq[Float](0).map(_.toDouble)
-    def run(df: org.apache.spark.sql.DataFrame) =
-      SimilaritySearch.ivfPqResidualTopKTrained(df, col("vec_id"),
-          col("embedding"), q, kIvf = 4, nprobe = 2, kSub = 8, m = 2,
-          subDim = 4, k = 5)
-        .orderBy("rank").collect()
-        .map(r => (r.getAs[Long]("id"), r.getAs[Double]("adc_dist"))).toSeq
-    val base = run(trainedFixture)
-    assert(base.size == 5)
-    assert(base.map(_._2).forall(_ >= 0.0))
-    assert(run(trainedFixture.repartition(13)) === base)
-  }
-
-  test("ivfPqIndexTrained: parquet-roundtripped stored search equals the " +
-    "inline trained build; refined stored entry equals the manual " +
-    "composition") {
+  test("storeIndex/readIndex: the parquet-roundtripped index holds the " +
+    "same rows as the in-memory build and serves the same results") {
     val e = trainedFixture
     val q = e.filter(col("vec_id") === 0).select("embedding")
       .head.getSeq[Float](0).map(_.toDouble)
-    val idx = SimilaritySearch.ivfPqIndexTrained(e, col("vec_id"),
-      col("embedding"), kIvf = 4, kSub = 8, m = 2, subDim = 4)
+    val idx = SimilaritySearch.ivfPqIndexTrainedSpilled(e, col("vec_id"),
+      col("embedding"), kIvf = 4, a = 2, kSub = 8, m = 2, subDim = 4)
     val dir = java.nio.file.Files
-      .createTempDirectory("ivfpq-trained-idx").toString
-    idx.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    idx.assignments.write.mode("overwrite").parquet(s"$dir/assignments")
-    idx.codebook.write.mode("overwrite").parquet(s"$dir/codebook")
-    idx.codes.write.mode("overwrite").parquet(s"$dir/codes")
-    val stored = SimilaritySearch.IvfPqTrainedIndex(
-      spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/assignments"),
-      spark.read.parquet(s"$dir/codebook"),
-      spark.read.parquet(s"$dir/codes"))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("rank")
-      .collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[Double]("adc_dist"))).toSeq
-    val fromStored = rows(SimilaritySearch.ivfPqTopKTrainedFromIndex(
-      stored, q, nprobe = 2, m = 2, subDim = 4, k = 5))
-    val inline = rows(SimilaritySearch.ivfPqTopKTrained(e, col("vec_id"),
-      col("embedding"), q, kIvf = 4, nprobe = 2, kSub = 8, m = 2,
-      subDim = 4, k = 5))
-    assert(fromStored.size == 5)
-    assert(fromStored === inline)
-    def cosRows(df: org.apache.spark.sql.DataFrame) = df.orderBy("rank")
-      .collect()
-      .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-    val refined = cosRows(SimilaritySearch.ivfPqTopKTrainedRefinedFromIndex(
-      stored, e, col("vec_id"), col("embedding"), q, nprobe = 2, m = 2,
-      subDim = 4, k = 5, refineFactor = 3))
-    val manual = cosRows(SimilaritySearch.refineTopK(e, col("vec_id"),
-      col("embedding"),
-      SimilaritySearch.ivfPqTopKTrainedFromIndex(stored, q, nprobe = 2,
-        m = 2, subDim = 4, k = 15),
-      q, 5))
-    assert(refined === manual)
+      .createTempDirectory("ivfpq-stored-idx").toString
+    val stored = SimilaritySearch.storeIndex(idx, dir)
+    def frames(i: SimilaritySearch.IvfPqTrainedIndex) =
+      Seq(i.centroids, i.assignments, i.codebook, i.codes)
+    frames(idx).zip(frames(stored)).foreach { case (built, back) =>
+      assert(built.exceptAll(back).isEmpty && back.exceptAll(built).isEmpty)
+    }
+    // the four frames land in the named directories readIndex reads
+    Seq("centroids", "assignments", "codebook", "codes").foreach { name =>
+      assert(new java.io.File(s"$dir/$name").isDirectory, name)
+    }
+    def served(i: SimilaritySearch.IvfPqTrainedIndex) =
+      SimilaritySearch.ivfPqTopKTrainedSpilledRefinedFromIndex(i, e,
+          col("vec_id"), col("embedding"), q, nprobe = 2, m = 2, subDim = 4,
+          k = 5)
+        .orderBy("rank").collect()
+        .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
+    val inMemory = served(idx)
+    assert(inMemory.size == 5)
+    assert(served(stored) === inMemory)
+    assert(served(SimilaritySearch.readIndex(spark, dir)) === inMemory)
+    // the trained build is a function of the data, not its layout
+    assert(served(SimilaritySearch.ivfPqIndexTrainedSpilled(
+      e.repartition(13), col("vec_id"), col("embedding"), kIvf = 4, a = 2,
+      kSub = 8, m = 2, subDim = 4)) === inMemory)
   }
 
   test("ivfPqTopKRefinedFromIndex: equals refineTopK composed over the " +

@@ -22,19 +22,10 @@ class SpilledServingSpec extends SparkSpec {
   test("spilled trained serving off stored artifacts: k distinct ids, " +
       "exact-cosine ordered, every hit inside the probed spilled lists") {
     val e = Tables.load(spark, Dir, "embeddings")
-    val idx = SimilaritySearch.ivfPqIndexTrainedSpilled(e, col("vec_id"),
-      col("embedding"), KIvf, A, KSub, M, SubDim)
-    val out = java.nio.file.Files
-      .createTempDirectory("spilled_serving").toString
-    idx.centroids.write.parquet(s"$out/centroids")
-    idx.assignments.write.parquet(s"$out/assignments")
-    idx.codebook.write.parquet(s"$out/codebook")
-    idx.codes.write.parquet(s"$out/codes")
-    val stored = SimilaritySearch.IvfPqTrainedIndex(
-      spark.read.parquet(s"$out/centroids"),
-      spark.read.parquet(s"$out/assignments"),
-      spark.read.parquet(s"$out/codebook"),
-      spark.read.parquet(s"$out/codes"))
+    val stored = SimilaritySearch.storeIndex(
+      SimilaritySearch.ivfPqIndexTrainedSpilled(e, col("vec_id"),
+        col("embedding"), KIvf, A, KSub, M, SubDim),
+      java.nio.file.Files.createTempDirectory("spilled_serving").toString)
     val q = e.filter(col("vec_id") === 0).select("embedding")
       .head.getSeq[Float](0).map(_.toDouble)
 
@@ -84,8 +75,10 @@ class SpilledServingSpec extends SparkSpec {
     // full build's rows for those vectors (work ∝ delta — the q134
     // incremental-maintenance discipline)
     val delta = e.filter(col("vec_id") % 5 === 0)
-    val (dAssign, dCodes) = SimilaritySearch.ivfPqAppendTrainedSpilled(
-      stored, delta, col("vec_id"), col("embedding"), A, M, SubDim)
+    val dAssign = SimilaritySearch.assignAgainstL2TopA(stored.centroids,
+      delta, col("vec_id"), col("embedding"), A)
+    val dCodes = SimilaritySearch.pqCodesSub(delta, col("vec_id"),
+      col("embedding"), stored.codebook, M, SubDim)
     val deltaIds = delta.select(col("vec_id").as("id"))
     assert(dAssign.exceptAll(stored.assignments.join(deltaIds, "id"))
       .isEmpty && stored.assignments.join(deltaIds, "id")

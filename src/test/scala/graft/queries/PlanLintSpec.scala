@@ -24,11 +24,10 @@ class PlanLintSpec extends SparkSpec {
     "q122_semantic_dedup" -> "IVF-blocked cosine: broadcast centroid argmax assignment",
     "q153_semantic_decontaminate" -> "cross-set IVF probe: broadcast bench-centroid table against both the bench (top-1 assignment) and corpus (nprobe probes) sides",
     "q134_ivf_append" -> "delta assignment against broadcast stored centroids",
-    "q85_pq_adc_topk" -> "broadcast PQ codebook × vectors: scan-local encode",
     // (q143's search plan has NO BNLJ: the q141 kernels run only in the
     // eager one-time artifact build; the returned plan reads stored frames)
-    "q141_ivfpq_topk" -> "IVF-PQ composes both allowlisted kernels: broadcast centroid argmax (q72) + broadcast codebook encode (q85), each against probed-list members only",
-    "q144_ivfpq_residual_topk" -> "residual IVF-PQ: the same broadcast kernels in residual space, plus the nprobe-row query-residual frame crossJoined with the broadcast codebook (nprobe*k rows)",
+    "q141_ivfpq_topk" -> "IVF-PQ: the broadcast centroid argmax kernel (q72); the PQ encode against probed-list members is a broadcast equi-join on the subspace",
+    "q144_ivfpq_residual_topk" -> "residual IVF-PQ: the broadcast centroid argmax kernel, plus the nprobe-row query-residual frame crossJoined with the broadcast codebook (nprobe*k rows)",
     "q154_ann_refine" -> "the q141 kernels build the ADC shortlist stage; the refine stage itself is a broadcast equi semi-join of 30 ids",
     "q94_bm25" -> "broadcast 1-row corpus-stats frame joined to every doc",
     "q125_unigram_logprob" -> "broadcast 1-row corpus token-count frame",
