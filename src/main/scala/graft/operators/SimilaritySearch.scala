@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.mllib.clustering.GraftLocalKMeans
 
 /**
  * Approximate/exact nearest-neighbor search over an embedding column
@@ -583,8 +584,9 @@ object SimilaritySearch {
     * 65536 (32 MB of doubles at d=64) keeps comfortable driver headroom
     * while any caller feeding an unbounded frame stays distributed, so
     * the row count alone picks the path. Centers are bit-identical to
-    * the distributed fit (LocalKMeansSpec pins doubleToRawLongBits
-    * equality on every trained config). */
+    * the distributed fit of a local-mode Spark 4.1.x session
+    * (LocalKMeansSpec pins doubleToRawLongBits equality on every trained
+    * config). */
   private val LocalKMeansMaxRows = 65536L
 
   /** Partition-structured collect of a vector column — the exact rows,
@@ -606,17 +608,43 @@ object SimilaritySearch {
                                    initMode: String): Array[Array[Double]] =
     new org.apache.spark.ml.clustering.KMeans()
       .setK(k).setSeed(seed).setInitMode(initMode).setMaxIter(maxIter)
+      .setInitSteps(GraftLocalKMeans.InitSteps)
+      .setDistanceMeasure(GraftLocalKMeans.Distance)
       .setTol(1e-6).setFeaturesCol(featCol)
       .fit(train)
       .clusterCenters.map(_.toArray)
 
+  /** Runs `f` over `train` persisted, with its row count: the size gate
+    * and the fit that follows it read ONE materialization of the
+    * canonForFit exchange instead of computing it twice. */
+  private def withPersisted[A](train: DataFrame)(f: (DataFrame, Long) => A): A = {
+    val cached = train.persist()
+    try f(cached, cached.count())
+    finally cached.unpersist()
+  }
+
   private def fitKMeans(train: DataFrame, featCol: String, k: Int,
                         seed: Long): Array[Array[Double]] =
-    if (train.count() <= LocalKMeansMaxRows)
-      org.apache.spark.mllib.clustering.GraftLocalKMeans.fit(
-        collectVectorParts(train, featCol), k, 20, 1e-6, seed, "k-means||")
-    else
-      fitKMeansDistributed(train, featCol, k, seed, 20, "k-means||")
+    withPersisted(train) { (t, n) =>
+      if (n <= LocalKMeansMaxRows)
+        GraftLocalKMeans.fit(collectVectorParts(t, featCol), k, 20, 1e-6,
+          seed, "k-means||")
+      else fitKMeansDistributed(t, featCol, k, seed, 20, "k-means||")
+    }
+
+  /** Independent fits run on a fixed pool of min(fits, 8) driver
+    * threads; results come back in input order. Each fit is a pure
+    * function of its inputs, so the result equals the serial run. */
+  private def concurrently[A](fits: Seq[() => A]): Seq[A] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(fits.size, 8)))
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    try Await.result(Future.sequence(fits.map(f => Future(f()))), Duration.Inf)
+    finally pool.shutdown()
+  }
 
   /**
    * TRAINED IVF coarse centroids — seeded spherical k-means over unit
@@ -732,55 +760,38 @@ object SimilaritySearch {
     val e = vecs.select(idCol.as("id"),
       vecCol.cast("array<double>").as("v"))
       .filter(col("v").isNotNull) // null vector = no trainable features
-    val canon = canonForFit(e, "pq-km", trainFrac)
-    // r18: at a bounded sample (the trainFrac contract) the m fits run
-    // entirely on the driver from ONE partition-structured collect —
-    // slice(v, s·subDim+1, subDim) + array_to_vector is replayed as a
-    // local copyOfRange over the same rows in the same order, so every
-    // subspace fit sees bit-identical input to the distributed form.
-    // TWO Spark jobs (count + collect) replace m × (count + init +
-    // Lloyd-rounds) — the q210/q204/q211/q214 job storm (452 jobs for
-    // q210) was ~60% k-means scheduler overhead over ≤2048 rows.
+    // at a bounded sample (the trainFrac contract) the m fits run on the
+    // driver from ONE partition-structured collect — slice(v,
+    // s·subDim+1, subDim) + array_to_vector is replayed as a local
+    // copyOfRange over the same rows in the same order, so every
+    // subspace fit sees bit-identical input to the distributed form. An
+    // unbounded caller gets m distributed fits over the persisted
+    // sample. Either way the m fits are independent seeded functions of
+    // (rows, seed + s): they run concurrently (the CrossValidator-
+    // parallelism mechanism) and are assembled in subspace order.
     val rows: Seq[(Int, Long, Seq[Double])] =
-      if (canon.count() <= LocalKMeansMaxRows) {
-        val parts = collectVectorParts(canon.select(
-          org.apache.spark.ml.functions.array_to_vector(col("v")).as("f")), "f")
-        (0 until m).flatMap { s =>
-          val sliced = parts.map(_.map(v =>
-            org.apache.spark.mllib.linalg.Vectors.dense(java.util.Arrays
-              .copyOfRange(v.toArray, s * subDim, s * subDim + subDim))))
-          org.apache.spark.mllib.clustering.GraftLocalKMeans
-            .fit(sliced, k, maxIter, 1e-6, seed + s, initMode)
-            .zipWithIndex.map { case (c, i) => (s, i.toLong, c.toSeq) }
+      withPersisted(canonForFit(e, "pq-km", trainFrac)) { (canon, n) =>
+        val fits: Seq[() => Array[Array[Double]]] =
+          if (n <= LocalKMeansMaxRows) {
+            val parts = collectVectorParts(canon.select(
+              org.apache.spark.ml.functions.array_to_vector(col("v")).as("f")), "f")
+            (0 until m).map { s => () =>
+              GraftLocalKMeans.fit(parts.map(_.map(v =>
+                org.apache.spark.mllib.linalg.Vectors.dense(java.util.Arrays
+                  .copyOfRange(v.toArray, s * subDim, s * subDim + subDim)))),
+                k, maxIter, 1e-6, seed + s, initMode)
+            }
+          } else (0 until m).map { s => () =>
+            fitKMeansDistributed(
+              canon.withColumn("f",
+                  org.apache.spark.ml.functions.array_to_vector(
+                    slice(col("v"), s * subDim + 1, subDim)))
+                .select("id", "f"),
+              "f", k, seed + s, maxIter, initMode)
+          }
+        concurrently(fits).zipWithIndex.flatMap { case (centers, s) =>
+          centers.zipWithIndex.map { case (c, i) => (s, i.toLong, c.toSeq) }
         }
-      } else {
-        // distributed path (unbounded caller): the m fits are
-        // independent seeded jobs over the same 4-partition cached
-        // sample — submit them CONCURRENTLY (the CrossValidator-
-        // parallelism mechanism; results are per-fit deterministic,
-        // assembled in subspace order). canon materializes once up
-        // front so the concurrent fits race on a warm cache.
-        val cached = canon.cache()
-        try {
-          cached.count()
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(m, 8))
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          try Await.result(Future.sequence((0 until m).map { s => Future {
-              fitKMeansDistributed(
-                cached.withColumn("f",
-                    org.apache.spark.ml.functions.array_to_vector(
-                      slice(col("v"), s * subDim + 1, subDim)))
-                  .select("id", "f"),
-                "f", k, seed + s, maxIter, initMode)
-                .zipWithIndex.map { case (c, i) => (s, i.toLong, c.toSeq) }
-            } }), Duration.Inf).flatten
-          finally pool.shutdown()
-        }
-        finally cached.unpersist()
       }
     import spark.implicits._
     rows.toDF("s", "cid", "cvs")

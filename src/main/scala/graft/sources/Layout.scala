@@ -176,29 +176,56 @@ object Layout {
    * [[recoverCompaction]], and a reader never sees the key absent.
    *
    * Scale contract: this is the POINT-update path — `updates` is a
-   * handful of rows (its keys collect to the driver to prune the file
-   * scan, bounded by `maxKeys`). Only files CONTAINING a matched key
-   * rewrite (parquet min/max skipping + a z-ordered layout on the key
-   * make the probe read ~nothing else); a pure insert rewrites no file
-   * at all — it lands as one new file. Bulk upserts belong to
+   * handful of rows, collected to the driver ONCE (bounded by
+   * `maxKeys + 1`; the NULL-key, distinct-key and duplicate checks run
+   * on that copy, and its keys prune the file scan). Only files
+   * CONTAINING a matched key rewrite (parquet min/max skipping + a
+   * z-ordered layout on the key make the probe read ~nothing else),
+   * each into ONE new file holding its surviving rows and the updates
+   * of its own keys, so neither the lake nor a file's key range grows;
+   * keys no file holds (a pure insert rewrites no file at all) land
+   * together as one new file. Bulk upserts belong to
    * [[graft.operators.Scd2]] / a partition-overwrite rebuild, not here.
+   *
+   * Job shape: the schema read of `dir`, the collect of `updates` (none
+   * when it is a local frame), the affected-file probe, the write. The
+   * row-count guard sums the parquet footers of the affected files and
+   * of the side generation (the row-group counts a `count()` of them
+   * reads) and side reads reuse the table schema, so neither costs a
+   * job.
+   *
+   * Reader contract: the superseded files are DELETED at the swap, so a
+   * plan over `dir` made before the upsert fails with FILE_NOT_EXIST
+   * when it executes after it and must be re-planned; readers and
+   * maintainers of one directory must be serialized by the caller.
    */
   def upsertByKey(spark: org.apache.spark.sql.SparkSession, dir: String,
                   updates: org.apache.spark.sql.DataFrame, keyCol: String,
                   maxKeys: Int = 1000): UpsertStats = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     recoverCompaction(spark, dir)
-    val df = spark.read.parquet(dir)
+    upsertInto(spark, dir, spark.read.parquet(dir), updates, keyCol, maxKeys,
+      probed = None)
+  }
+
+  /** The upsert transaction over the already-read table frame `df`.
+    * `probed` = the (file, matched rows) of the updates' keys when the
+    * caller has found them already ([[patchRow]]'s probe); otherwise one
+    * grouped scan finds them. */
+  private def upsertInto(spark: org.apache.spark.sql.SparkSession,
+                         dir: String, df: DataFrame, updates: DataFrame,
+                         keyCol: String, maxKeys: Int,
+                         probed: Option[Seq[(String, Seq[Any])]]): UpsertStats = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = path.getFileSystem(conf)
     require(updates.columns.sorted.sameElements(df.columns.sorted),
       s"upsertByKey: updates columns ${updates.columns.sorted.mkString(",")} " +
         s"must match table columns ${df.columns.sorted.mkString(",")}")
     val u = updates.select(df.columns.map(col): _*)
-    // TYPES too, not just names: a pure insert writes `u` verbatim as a
-    // new file — a mismatched type (v: INT vs the table's DOUBLE) would
-    // land a conflicting physical schema and brick every subsequent
-    // read of the directory (the replace path would at least fail in
-    // unionByName; the insert path had no check at all)
+    // TYPES too, not just names: a pure insert writes the updates
+    // verbatim as a new file — a mismatched type (v: INT vs the table's
+    // DOUBLE) would land a conflicting physical schema and brick every
+    // subsequent read of the directory
     val tTypes = df.schema.map(f => f.name -> f.dataType).toMap
     val badTypes = u.schema.filter(f => tTypes(f.name) != f.dataType)
     require(badTypes.isEmpty,
@@ -206,18 +233,20 @@ object Layout {
         badTypes.map(f =>
           s"${f.name}: ${f.dataType.simpleString} vs ${tTypes(f.name).simpleString}")
           .mkString(", "))
-    val keyRows = u.select(keyCol).distinct().limit(maxKeys + 1).collect()
-    require(keyRows.length <= maxKeys,
-      s"upsertByKey is the point-update path (> $maxKeys distinct keys); " +
+    val rows = u.limit(maxKeys + 1).collect()
+    require(rows.length <= maxKeys,
+      s"upsertByKey is the point-update path (> $maxKeys update rows); " +
         "use a partition rebuild for bulk upserts")
-    require(keyRows.nonEmpty, "upsertByKey: empty updates")
+    require(rows.nonEmpty, "upsertByKey: empty updates")
+    val keyIdx = df.columns.indexOf(keyCol)
+    require(keyIdx >= 0, s"upsertByKey: no key column $keyCol in the table")
+    val keys = rows.map(_.get(keyIdx)).distinct.toSeq
     // a NULL key can never equal a stored key (three-valued isin), so
     // it would re-insert on every replay instead of replacing — reject
-    require(!keyRows.exists(_.isNullAt(0)),
+    require(!keys.contains(null),
       s"upsertByKey: NULL $keyCol in updates — keys must be non-null")
-    require(u.count() == keyRows.length,
+    require(rows.length == keys.length,
       s"upsertByKey: duplicate keys in updates — one row per $keyCol")
-    val keys = keyRows.map(_.get(0)).toSeq
     val pred = col(keyCol).isin(keys: _*)
     val snapshot = df.inputFiles.map(new org.apache.hadoop.fs.Path(_))
     val qualified = fs.makeQualified(path)
@@ -225,10 +254,10 @@ object Layout {
       require(fs.makeQualified(p).getParent == qualified,
         s"upsertByKey requires a FLAT directory; found nested file $p")
     }
-    val affected = df.filter(pred)
-      .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    val matched = affected.map(_._2).sum
+    val affected = probed.getOrElse(df.filter(pred)
+      .groupBy(input_file_name().as("f")).agg(collect_list(col(keyCol)))
+      .collect().map(r => r.getString(0) -> r.getSeq[Any](1)).toSeq)
+    val matched = affected.map(_._2.length).sum
     // more matches than distinct keys ⇒ the STORED table already holds
     // a duplicated key (corruption outside the marker protocol) — fail
     // loudly rather than emit negative rowsInserted stats
@@ -236,27 +265,39 @@ object Layout {
       s"upsertByKey: stored table holds duplicate $keyCol rows " +
         s"($matched matches for ${keys.length} keys) — repair the table " +
         "(deleteWhere + re-insert) before upserting")
-    val affectedSet = affected.map { case (f, _) =>
-      fs.makeQualified(new org.apache.hadoop.fs.Path(new java.net.URI(f)))
-    }.toSet
+    val affectedFiles = affected.map { case (f, ks) =>
+      fs.makeQualified(new org.apache.hadoop.fs.Path(new java.net.URI(f))) ->
+        ks.toSet
+    }
+    val affectedSet = affectedFiles.map(_._1).toSet
+    def localOf(rs: Seq[org.apache.spark.sql.Row]) =
+      spark.createDataFrame(java.util.Arrays.asList(rs: _*), df.schema)
+    val inserts = rows.toSeq.filterNot(r =>
+      affectedFiles.exists(_._2.contains(r.get(keyIdx))))
+    // each rewritten file's surviving rows and the updates of ITS keys
+    // coalesce into ONE new file, so its key range (what min/max
+    // skipping prunes on) does not widen; keys no file holds land
+    // together as one more file. One write job for all of them: the
+    // single-partition parts are concatenated as RDDs, because a
+    // Dataset union of single-partition children is itself one
+    // partition in Spark 4.
+    val parts = affectedFiles.map { case (p, ks) =>
+      spark.read.schema(df.schema).parquet(p.toString)
+        .filter(!coalesce(pred, lit(false))) // NULL-key rows kept, as in deleteWhere
+        .unionByName(localOf(rows.toSeq.filter(r => ks.contains(r.get(keyIdx)))))
+    } ++ Seq(inserts).filter(_.nonEmpty).map(localOf)
+    val newGen = spark.createDataFrame(
+      spark.sparkContext.union(parts.map(_.coalesce(1).rdd)), df.schema)
+    val expected = footerRows(conf, affectedSet) - matched + keys.length
     val gen = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new org.apache.hadoop.fs.Path(dir + TmpInfix + gen)
-    val (newGen, expected) =
-      if (affectedSet.isEmpty) (u, keys.length.toLong)
-      else {
-        val affectedDf =
-          spark.read.parquet(affectedSet.map(_.toString).toSeq: _*)
-        // NULL-key rows kept, as in deleteWhere
-        (affectedDf.filter(!coalesce(pred, lit(false))).unionByName(u),
-          affectedDf.count() - matched + keys.length)
-      }
     newGen.write.mode("overwrite").parquet(tmp.toString)
-    val got = spark.read.parquet(tmp.toString).count()
+    val newFiles = fs.listStatus(tmp)
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    val got = footerRows(conf, newFiles.map(_.getPath))
     require(got == expected,
       s"upsertByKey row-count mismatch ($got != $expected) — original " +
         "left untouched")
-    val newFiles = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     val plan = newFiles.zipWithIndex.map { case (f, i) =>
       f.getPath.getName -> s"upserted-$gen-$i.parquet"
     }
@@ -270,12 +311,32 @@ object Layout {
       matched, keys.length - matched)
   }
 
+  /** Rows in parquet `files` from their footers — the row-group counts a
+    * `count()` over the same files reads, without a Spark job. */
+  private def footerRows(conf: org.apache.hadoop.conf.Configuration,
+                         files: Iterable[org.apache.hadoop.fs.Path]): Long =
+    files.iterator.map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+
   /**
-   * PATCH-one-row semantics over [[upsertByKey]] (reference:
-   * api/main.py:554-586): read the current row by key (a pruned point
-   * lookup), fail loudly when absent (the endpoint's 404), apply the
-   * partial `setters` (column → new-value expression, evaluated against
-   * the current row), write back through the upsert transaction.
+   * PATCH-one-row semantics over the [[upsertByKey]] transaction
+   * (reference: api/main.py:554-586): read the current row by key, fail
+   * loudly when absent (the endpoint's 404), apply the partial
+   * `setters` (column → new-value expression, evaluated against the
+   * current row), write back.
+   *
+   * Job shape — three Spark jobs: the schema read of `dir` (done once
+   * and shared with the upsert), ONE probe that returns the current row
+   * with its `input_file_name()` (at most 2 rows per partition, which is
+   * all the stored-duplicate guard needs), and the write. The setters
+   * apply to a local (LocalRelation) copy of the probed row, so they
+   * cost no job; the row-count guard reads parquet footers, as in
+   * [[upsertByKey]], whose reader contract holds here too: a plan over
+   * `dir` made before the PATCH fails with FILE_NOT_EXIST afterwards and
+   * must be re-planned.
    */
   def patchRow(spark: org.apache.spark.sql.SparkSession, dir: String,
                keyCol: String, keyValue: Any,
@@ -283,19 +344,29 @@ object Layout {
     // recover any crashed swap BEFORE reading: a pending marker means
     // both generations may be on disk — reading through it would see
     // the key twice (tripping the duplicate-key guard) or resolve
-    // files that the recovery inside upsertByKey then deletes
+    // files that the recovery then deletes
     recoverCompaction(spark, dir)
     val df = spark.read.parquet(dir)
     val bad = setters.keySet.filterNot(df.columns.contains)
     require(bad.isEmpty, s"patchRow: unknown column(s) ${bad.mkString(",")}")
     require(!setters.contains(keyCol), "patchRow cannot rewrite the key")
-    val current = df.filter(col(keyCol) === lit(keyValue))
-    require(!current.isEmpty,
+    val hits = df.filter(col(keyCol) === lit(keyValue))
+      .select(col("*"), input_file_name())
+      .rdd.mapPartitions(_.take(2)).collect()
+    require(hits.nonEmpty,
       s"patchRow: no row with $keyCol = $keyValue (not found)")
+    val current = spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row.fromSeq(hits.head.toSeq.init)),
+      df.schema)
     val updated = setters.foldLeft(current) { case (acc, (c, e)) =>
       acc.withColumn(c, e)
     }
-    upsertByKey(spark, dir, updated, keyCol)
+    // two hits ⇒ the stored table duplicates the key: upsertInto's
+    // matched-vs-keys guard rejects it
+    val keyIdx = df.columns.indexOf(keyCol)
+    val probed = hits.groupBy(r => r.getString(r.length - 1))
+      .map { case (f, rs) => f -> rs.map(_.get(keyIdx)).toSeq }.toSeq
+    upsertInto(spark, dir, df, updated, keyCol, maxKeys = 1, Some(probed))
   }
 
   /**

@@ -15,8 +15,9 @@ import org.apache.spark.util.random.{BernoulliSampler, SamplingUtils, XORShiftRa
  * init/Lloyd rounds over a ≤2048-row sample; the fit cost was job
  * COUNT, not compute).
  *
- * Bit-exactness contract: every numeric step calls the SAME MLlib
- * primitive the distributed fit calls —
+ * Bit-exactness contract — scoped to LOCAL-MODE merge order on Spark
+ * 4.1.x: every numeric step calls the SAME MLlib primitive the
+ * distributed fit calls —
  * [[DistanceMeasure.findClosest]] (stats-pruned, the exact
  * fastSquaredDistance float path), [[DistanceMeasure.updateClusterSum]]
  * / [[DistanceMeasure.centroid]] / [[DistanceMeasure.isCenterConverged]],
@@ -26,9 +27,15 @@ import org.apache.spark.util.random.{BernoulliSampler, SamplingUtils, XORShiftRa
  * `PartitionwiseSampledRDD.getPartitions` use it — applied to the same
  * rows in the same per-partition order the distributed fit sees. The
  * driver-level control flow (sampling loops, per-partition partial
- * sums merged in ascending-partition order — local-mode shuffle fetch
- * order) is transcribed from the 4.1.2 bytecode. `LocalKMeansSpec`
- * pins bit-for-bit equality (`java.lang.Double.doubleToRawLongBits`)
+ * sums merged in ascending-partition order) is transcribed from the
+ * 4.1.2 bytecode. Spark guarantees neither merge order: the
+ * distributed `costs.sum()` folds partials in task-COMPLETION order and
+ * the Lloyd `reduceByKey` merges combiners in shuffle-FETCH order, which
+ * are partition-ascending only in local mode. So the replay equals the
+ * distributed fit of a local-mode session, not of a cluster, and
+ * another Spark version may change the transcribed flow: [[fit]]
+ * refuses to run on anything but 4.1.x. `LocalKMeansSpec` pins
+ * bit-for-bit equality (`java.lang.Double.doubleToRawLongBits`)
  * against the MLlib fit on every (fixture, k, seed, maxIter, initMode)
  * combination the declared queries and the AnnRecall protocol train.
  *
@@ -36,21 +43,35 @@ import org.apache.spark.util.random.{BernoulliSampler, SamplingUtils, XORShiftRa
  * in order) because k-means|| sampling, takeSample and the partial-sum
  * merge are all functions of the partition layout — the caller
  * collects the canonical 4-partition layout `canonForFit` pins.
+ *
+ * Fits share no mutable state: each call builds its own norms, centers,
+ * samplers and distance measure, and only reads `parts`, so callers may
+ * run several fits at once on driver threads (the per-subspace PQ
+ * codebook does).
  */
 object GraftLocalKMeans {
 
+  /** The k-means configuration the replay transcribes (MLlib's
+    * defaults): the distributed fit it is compared with must set these. */
+  val InitSteps = 2
+  val Distance: String = DistanceMeasure.EUCLIDEAN
+
   /** Mirror of `new KMeans().setK(k).setSeed(seed).setInitMode(initMode)
+    * .setInitSteps(InitSteps).setDistanceMeasure(Distance)
     * .setMaxIter(maxIter).setTol(epsilon).fit(...)` over the collected
     * sample. Returns `model.clusterCenters` as raw double arrays. */
   def fit(parts: Array[Array[Vector]], k: Int, maxIterations: Int,
           epsilon: Double, seed: Long, initMode: String): Array[Array[Double]] = {
+    require(org.apache.spark.SPARK_VERSION.startsWith("4.1."),
+      s"GraftLocalKMeans replays Spark 4.1.x k-means; running on Spark " +
+        s"${org.apache.spark.SPARK_VERSION} — re-transcribe it before use")
     // runWithWeight: norms zipped on, weight 1.0 per row
     val data: Array[Array[VectorWithNorm]] = parts.map(_.map(v =>
       new VectorWithNorm(v, Vectors.norm(v, 2.0), 1.0)))
-    val dm = DistanceMeasure.decodeFromString(DistanceMeasure.EUCLIDEAN)
+    val dm = DistanceMeasure.decodeFromString(Distance)
     val centers: Array[VectorWithNorm] =
       if (initMode == KMeans.RANDOM) initRandom(data, k, seed)
-      else initKMeansParallel(data, dm, k, seed, initSteps = 2)
+      else initKMeansParallel(data, dm, k, seed, InitSteps)
     val numFeatures = centers.head.vector.size
     val shouldComputeStats =
       DistanceMeasure.shouldComputeStatistics(centers.length)

@@ -222,6 +222,12 @@ class LayoutSpec extends SparkSpec {
       Layout.upsertByKey(spark, dir, Seq((3L, 1.0)).toDF("id", "v"), "id")
     }
     assert(e.getMessage.contains("duplicate"))
+    // patchRow's probe sees both stored rows and trips the same guard
+    val p = intercept[IllegalArgumentException] {
+      Layout.patchRow(spark, dir, "id", 3L, Map("v" -> lit(1.0)))
+    }
+    assert(p.getMessage.contains("duplicate"))
+    assert(spark.read.parquet(dir).count() === 11L, "table left untouched")
   }
 
   test("patchRow: partial setters evaluate against the current row; " +
@@ -250,6 +256,83 @@ class LayoutSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Layout.patchRow(spark, dir, "id", 42L, Map("id" -> lit(1L)))
     }
+  }
+
+  /** Spark jobs `f` submits from this thread (its own job group, so a
+    * job of any other thread on the shared session is not counted). */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"layout-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "job count")
+    try {
+      f
+      org.apache.spark.ListenerBusShim.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    jobs.get
+  }
+
+  test("patchRow on an 8-file table: at most 3 Spark jobs (schema read, " +
+      "probe, write), one file rewritten per PATCH, file count unchanged") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-patch-jobs")
+      .resolve("table").toString
+    spark.range(800)
+      .selectExpr("id", "'new' AS status", "cast(id as double) AS v")
+      .repartitionByRange(8, col("id")).write.parquet(dir)
+    def parquetFiles() =
+      new java.io.File(dir).listFiles.count(_.getName.endsWith(".parquet"))
+    assert(parquetFiles() === 8)
+    val n = jobsOf {
+      Layout.patchRow(spark, dir, "id", 421L,
+        Map("status" -> lit("converted"), "v" -> (col("v") + 1)))
+    }
+    assert(n <= 3, s"patchRow ran $n Spark jobs")
+    assert(parquetFiles() === 8, "lake grew after the first PATCH")
+    Seq(5L, 5L).foreach { id =>
+      val st = Layout.patchRow(spark, dir, "id", id,
+        Map("status" -> lit("converted")))
+      assert(st.filesRewritten === 1 && st.filesUntouched === 7)
+      assert(parquetFiles() === 8, s"lake grew after patching $id")
+    }
+    val back = spark.read.parquet(dir)
+    assert(back.count() === 800L)
+    assert(back.filter(col("status") === "converted")
+      .select("id").as[Long].collect().sorted.toSeq === Seq(5L, 421L))
+    assert(back.filter(col("id") === 421L).select("v").as[Double].head === 422.0)
+  }
+
+  test("upsertByKey over keys of two files: each rewritten file keeps its " +
+      "own key range, inserts land in one new file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert-ranges")
+      .resolve("table").toString
+    spark.range(800).selectExpr("id", "cast(id as double) AS v")
+      .repartitionByRange(8, col("id")).write.parquet(dir)
+    val st = Layout.upsertByKey(spark, dir,
+      Seq((150L, -1.0), (650L, -1.0), (900L, -1.0)).toDF("id", "v"), "id")
+    assert(st.filesRewritten === 3 && st.filesUntouched === 6)
+    assert(st.rowsReplaced === 2L && st.rowsInserted === 1L)
+    val ranges = spark.read.parquet(dir)
+      .groupBy(input_file_name()).agg(min("id"), max("id"))
+      .as[(String, Long, Long)].collect().map(r => (r._2, r._3)).sorted
+    assert(ranges.length === 9)
+    ranges.sliding(2).foreach { case Array((_, hi), (lo, _)) =>
+      assert(hi < lo, s"overlapping file key ranges: ${ranges.mkString(" ")}")
+    }
+    val back = spark.read.parquet(dir)
+    assert(back.count() === 801L)
+    assert(back.filter(col("v") === -1.0).select("id").as[Long].collect()
+      .sorted.toSeq === Seq(150L, 650L, 900L))
   }
 
   test("deleteWhere keeps rows where the predicate is NULL (erase only " +

@@ -47,6 +47,8 @@ class LocalKMeansSpec extends SparkSpec {
       : Array[Array[Double]] =
     new org.apache.spark.ml.clustering.KMeans()
       .setK(k).setSeed(seed).setInitMode(initMode).setMaxIter(maxIter)
+      .setInitSteps(GraftLocalKMeans.InitSteps)
+      .setDistanceMeasure(GraftLocalKMeans.Distance)
       .setTol(1e-6).setFeaturesCol("f")
       .fit(train)
       .clusterCenters.map(_.toArray)
