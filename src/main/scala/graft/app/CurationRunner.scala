@@ -39,7 +39,7 @@ import graft.operators.{Bpe, Corpus, Dedup, Dsir, NgramLm, Sampling, TopK}
  * materializes at stage boundaries by DESIGN (the dedup artifacts and
  * the corpus are multi-consumer frames; recomputing lineage across a
  * 100 TB pipeline is the anti-pattern). Counts come from the written
- * frames' own row counts, not extra scans of upstream.
+ * files' parquet footers, not extra scans of upstream or of the stage.
  */
 object CurationRunner {
 
@@ -97,16 +97,25 @@ object CurationRunner {
         val p = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
         p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
       }
+      // records come from the stored files' parquet footers — metadata
+      // reads, no count() job
+      def records = graft.DriverOps.footerRows(
+        spark.sessionState.newHadoopConf(), path)
       if (resume && committed) {
         val stored = spark.read.parquet(path)
-        results += StageResult(name, "cached", stored.count(), t0,
+        results += StageResult(name, "cached", records, t0,
           System.currentTimeMillis())
         return Some(stored)
       }
       try {
-        body.write.mode("overwrite").parquet(path)
-        val stored = spark.read.parquet(path)
-        results += StageResult(name, "success", stored.count(), t0,
+        val df = body
+        df.write.mode("overwrite").parquet(path)
+        // read back with the written schema (made nullable, as Spark's
+        // parquet reader returns it): no schema-inference job
+        val stored = spark.read
+          .schema(org.apache.spark.sql.graftshim.GraftShim.asNullable(df.schema))
+          .parquet(path)
+        results += StageResult(name, "success", records, t0,
           System.currentTimeMillis())
         Some(stored)
       } catch {

@@ -110,8 +110,8 @@ object PipelineRunner {
         ranked.write.mode("overwrite").parquet(s"$outDir/recommendations")
         // record count from the parquet footers — metadata-only, no
         // second scan of the data pages
-        val n = spark.read.parquet(s"$outDir/recommendations").count()
-        ((), n)
+        ((), graft.DriverOps.footerRows(spark.sessionState.newHadoopConf(),
+          s"$outDir/recommendations"))
       }
     }
 

@@ -17,10 +17,9 @@ import org.apache.spark.sql.functions._
  * torch/xgboost and the build is zero-egress):
  *   - nn  (torch MLP 64/32/16, dropout .3, sigmoid)  → MultilayerPerceptronClassifier
  *     layers [d,64,32,16,2] (no dropout/batchnorm in MLlib; softmax pair ≙ sigmoid)
- *   - xgb (XGBClassifier 100/d6/lr.1)                → [[NewtonBoost]] (default:
- *     TRUE second-order XGBoost semantics in-engine — Newton leaves, gain−γ,
- *     L1/L2, sparsity-aware missing; `xgbNewton = false` falls back to the
- *     pre-r15 GBTClassifier(100, d6, step .1) substitute)
+ *   - xgb (XGBClassifier 100/d6/lr.1)                → [[NewtonBoost]] (TRUE
+ *     second-order XGBoost semantics in-engine — Newton leaves, gain−γ,
+ *     L1/L2, sparsity-aware missing)
  *   - rf  (RandomForestClassifier 100/d10)           → RandomForestClassifier(100, d10)
  *   - gbt (GradientBoostingClassifier 100/d5/lr.1)   → GBTClassifier(100, d5, step .1)
  * Ensemble weights stay the reference's 0.3/0.3/0.2/0.2; evaluation gates
@@ -42,8 +41,7 @@ final class Ensemble(
     gbtIter: Int = 100,
     mlpIter: Int = 50,
     scale: Boolean = false,
-    seed: Long = 42L,
-    xgbNewton: Boolean = true) extends Serializable {
+    seed: Long = 42L) extends Serializable {
 
   // `scale = true` fits a real StandardScaler (zero-mean unit-variance)
   // between assembly and every model — the M9 path the reference
@@ -59,22 +57,6 @@ final class Ensemble(
     .setInputCol("raw_features").setOutputCol("features")
     .setWithMean(true).setWithStd(true)
 
-  /** (name, weight, estimator-pipeline) triples. Per-model prediction
-    * columns are suffixed so transforms compose on one frame. */
-  private def estimators(d: Int) = Seq(
-    ("nn", new MultilayerPerceptronClassifier()
-      .setLayers(Array(d, 64, 32, 16, 2)).setMaxIter(mlpIter)
-      .setSeed(seed).setLabelCol("label").setFeaturesCol("features")),
-    ("xgb", new GBTClassifier().setMaxIter(xgbIter).setMaxDepth(6)
-      .setStepSize(0.1).setSeed(seed).setLabelCol("label")
-      .setFeaturesCol("features")),
-    ("rf", new RandomForestClassifier().setNumTrees(numTrees)
-      .setMaxDepth(rfDepth).setSeed(seed).setLabelCol("label")
-      .setFeaturesCol("features")),
-    ("gbt", new GBTClassifier().setMaxIter(gbtIter).setMaxDepth(5)
-      .setStepSize(0.1).setSeed(seed).setLabelCol("label")
-      .setFeaturesCol("features")))
-
   /** Train/validation split, reference: pipeline.py:202-204 (0.2, seed 42). */
   def split(df: DataFrame): (DataFrame, DataFrame) = {
     val Array(tr, va) = df.randomSplit(Array(0.8, 0.2), seed)
@@ -85,31 +67,38 @@ final class Ensemble(
     * `label`). Small bounded input (post-top-k candidates) → single fit
     * per model; MLlib distributes tree building over partitions.
     *
-    * With `xgbNewton` (default) the xgb slot is the in-engine
-    * [[NewtonBoost]] — reference hyperparameters mapped 1:1
-    * (n_estimators=xgbIter, max_depth=6, learning_rate=0.1, xgboost's
-    * own λ=1/γ=0/α=0/min_child_weight=1 defaults). Trees are
-    * scale-invariant so the NewtonBoost slot always fits on the RAW
-    * feature columns (xgboost never scales its inputs either); it is
-    * also bit-deterministic at any partition layout — the one slot
-    * whose output needs no canonicalization. */
+    * The xgb slot is the in-engine [[NewtonBoost]] — reference
+    * hyperparameters mapped 1:1 (n_estimators=xgbIter, max_depth=6,
+    * learning_rate=0.1, xgboost's own λ=1/γ=0/α=0/min_child_weight=1
+    * defaults). Trees are scale-invariant so the NewtonBoost slot always
+    * fits on the RAW feature columns (xgboost never scales its inputs
+    * either); it is also bit-deterministic at any partition layout —
+    * the one slot whose output needs no canonicalization.
+    *
+    * The four slots are independent seeded fits of the same frame, so
+    * they run concurrently on a driver thread pool
+    * ([[graft.DriverOps.concurrently]]) and are assembled in slot order
+    * (nn, xgb, rf, gbt): the model equals the serial fit's. */
   def fit(train: DataFrame): EnsembleModel = {
-    val d = featureCols.size
-    val models = estimators(d).map { case (name, est) =>
-      if (name == "xgb" && xgbNewton)
-        name -> (NewtonSlot(NewtonBoost.fit(train, featureCols, "label",
-          NewtonBoost.Params(rounds = xgbIter, maxDepth = 6,
-            learningRate = 0.1))): SlotModel)
-      else {
-        val stages: Array[org.apache.spark.ml.PipelineStage] =
-          if (scale) Array(assembler, scalerStage,
-            est.asInstanceOf[org.apache.spark.ml.PipelineStage])
-          else Array(assembler, est.asInstanceOf[org.apache.spark.ml.PipelineStage])
-        val pipe = new Pipeline().setStages(stages)
-        name -> (MllibSlot(pipe.fit(train)): SlotModel)
-      }
-    }
-    new EnsembleModel(models, Scoring.referenceWeights.toMap)
+    def mllib(est: org.apache.spark.ml.PipelineStage): () => SlotModel = () =>
+      MllibSlot(new Pipeline().setStages(
+        if (scale) Array(assembler, scalerStage, est) else Array(assembler, est))
+        .fit(train))
+    val slots: Seq[(String, () => SlotModel)] = Seq(
+      "nn" -> mllib(new MultilayerPerceptronClassifier()
+        .setLayers(Array(featureCols.size, 64, 32, 16, 2)).setMaxIter(mlpIter)
+        .setSeed(seed).setLabelCol("label").setFeaturesCol("features")),
+      "xgb" -> (() => NewtonSlot(NewtonBoost.fit(train, featureCols, "label",
+        NewtonBoost.Params(rounds = xgbIter, maxDepth = 6, learningRate = 0.1)))),
+      "rf" -> mllib(new RandomForestClassifier().setNumTrees(numTrees)
+        .setMaxDepth(rfDepth).setSeed(seed).setLabelCol("label")
+        .setFeaturesCol("features")),
+      "gbt" -> mllib(new GBTClassifier().setMaxIter(gbtIter).setMaxDepth(5)
+        .setStepSize(0.1).setSeed(seed).setLabelCol("label")
+        .setFeaturesCol("features")))
+    new EnsembleModel(
+      slots.map(_._1).zip(graft.DriverOps.concurrently(slots.map(_._2))),
+      Scoring.referenceWeights.toMap)
   }
 }
 

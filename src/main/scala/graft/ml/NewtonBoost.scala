@@ -40,6 +40,23 @@ import graft.sources.Synthetic
  * `checkpointEvery` rounds with the Dedup free() discipline so lineage
  * and block storage stay O(1) across rounds.
  *
+ * Small-data replay: per level that layout costs a Spark job plus fresh
+ * codegen (the routing literals differ), which decides the fit time
+ * when the training set is small. The quantile-cut job also counts the
+ * rows, and the count alone picks the path: at ≤ 65 536 rows ONE
+ * bounded collect (`limit(65536)`) brings the binned frame to the
+ * driver, which replays every round — margins, g/h, the DECIMAL(38,18)
+ * histogram sums, routing — from the collected rows (and, with
+ * subsample < 1, each round's keep mask, computed in the same collect
+ * by the same column expression). A larger set runs no extra job. Split
+ * search and leaf weights are the shared code below, so the only
+ * difference between the paths is where the histogram comes from. The
+ * replay's model is bit-identical to the distributed fit's — g/h use
+ * `StrictMath.exp`, as Spark's `Exp` does in generated and interpreted
+ * code alike (`Math.exp` differs in the last bit for ~10% of inputs on
+ * x86-64 HotSpot) — and `NewtonBoostSpec` pins `toJson` equality and
+ * leaf bits between the two paths.
+ *
  * Gradient/hessian histogram sums aggregate in DECIMAL(38,18), so the
  * histograms — and therefore every split decision and the entire model —
  * are bit-identical under any partition layout (same discipline as the
@@ -235,22 +252,23 @@ object NewtonBoost {
 
   private val Dec = "decimal(38,18)"
 
-  /** Exact interior quantile cuts per feature, deduplicated ascending.
-    * One aggregate job computes all features' cut arrays (`percentile`
-    * ignores NULLs). Exact percentile keeps the binning — and so the
-    * model — fully deterministic; at 100 TB swap `percentile` for
-    * `approxQuantile` (cut jitter moves bin EDGES, not the objective). */
-  private[ml] def quantileCuts(df: DataFrame, featureCols: Seq[String],
-      maxBins: Int): Array[Array[Double]] = {
+  /** Exact interior quantile cuts per feature, deduplicated ascending,
+    * and the row count. One aggregate job computes all features' cut
+    * arrays (`percentile` ignores NULLs). Exact percentile keeps the
+    * binning — and so the model — fully deterministic; at 100 TB swap
+    * `percentile` for `approxQuantile` (cut jitter moves bin EDGES, not
+    * the objective). */
+  private def quantileCuts(df: DataFrame, featureCols: Seq[String],
+      maxBins: Int): (Array[Array[Double]], Long) = {
     val probs = (1 until maxBins).map(i => i.toDouble / maxBins)
     val aggs = featureCols.map { f =>
       expr(s"percentile(`$f`, array(${probs.mkString(",")}))").as(s"_c_$f")
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    featureCols.indices.map { i =>
+    val row = df.agg(aggs.head, aggs.tail :+ count(lit(1)): _*).head()
+    (featureCols.indices.map { i =>
       val raw = Option(row.getSeq[Double](i)).getOrElse(Seq.empty)
       raw.distinct.sorted.toArray
-    }.toArray
+    }.toArray, row.getLong(featureCols.size))
   }
 
   /** Bin index column for one feature: -1 for NULL (the missing bin),
@@ -268,31 +286,89 @@ object NewtonBoost {
   private final case class Cell(g: Double, h: Double, cnt: Long)
   private final case class Cand(gain: Double, feature: Int, bin: Int,
       missingLeft: Boolean, lStat: Cell, rStat: Cell)
+  /** A chosen split of node `node`: rows go to child `l` when their bin
+    * of feature `f` is ≤ `b` (NULL, bin -1, goes left iff `dl`). */
+  private final case class Route(node: Int, f: Int, b: Int, dl: Boolean,
+      l: Int, r: Int) {
+    def goLeft(bin: Int): Boolean = goesLeft(bin, b, dl)
+  }
+  private def goesLeft(bin: Int, b: Int, dl: Boolean): Boolean =
+    if (dl) bin == -1 || bin <= b else bin != -1 && bin <= b
+  /** node → feature → bin → Cell (bin -1 = missing). */
+  private type Hist = Map[Int, Map[Int, Map[Int, Cell]]]
+
+  /** Where one tree's level-wise histograms come from, and where its
+    * rows are routed: the distributed binned frame ([[FrameRows]]) or
+    * the driver's copy of it ([[DriverRows]]). Both yield the identical
+    * [[Hist]], so the split search never knows which one ran. */
+  private trait TreeRows {
+    /** Histogram of the rows that sit in `active` nodes. */
+    def histogram(active: Seq[Int]): Hist
+    def route(routes: Seq[Route]): Unit
+    def close(): Unit = ()
+  }
+
+  /** Row bound for the driver replay (the `GraftLocalKMeans`
+    * precedent, `SimilaritySearch.LocalKMeansMaxRows`): a training set
+    * this small is collected once and its histograms are summed on the
+    * driver; a larger one keeps the per-level histogram jobs. */
+  private val LocalMaxRows = 65536L
 
   /** Fit `params.rounds` trees on `df` (featureCols + 0/1 `labelCol`).
     * `idCol` keys the deterministic per-round row subsample (md5-hash
     * uniform — required when subsample < 1, ignored otherwise). */
   def fit(df: DataFrame, featureCols: Seq[String], labelCol: String,
-      params: Params, idCol: Option[String] = None): Model = {
+      params: Params, idCol: Option[String] = None): Model =
+    fitWith(df, featureCols, labelCol, params, idCol, LocalMaxRows)
+
+  /** [[fit]] with the driver-replay row bound as a parameter, so specs
+    * can force the distributed path on small data (`localMaxRows = -1`). */
+  private[ml] def fitWith(df: DataFrame, featureCols: Seq[String],
+      labelCol: String, params: Params, idCol: Option[String],
+      localMaxRows: Long): Model = {
     require(params.subsample >= 1.0 || idCol.isDefined,
       "subsample < 1 needs idCol for a deterministic row draw")
     val p = params
-    val cuts = quantileCuts(df, featureCols, p.maxBins)
+    val (cuts, rows) = quantileCuts(df, featureCols, p.maxBins)
     val binCols = featureCols.indices.map(i => s"_b$i")
-    val baseCols = featureCols.indices.map(i =>
+    val binned = df.select(featureCols.indices.map(i =>
       binCol(featureCols(i), cuts(i)).as(s"_b$i")) ++
       Seq(col(labelCol).cast("double").as("_y")) ++
-      idCol.map(c => col(c).cast("string").as("_id")).toSeq
+      idCol.map(c => col(c).cast("string").as("_id")).toSeq: _*)
 
+    // the row count alone picks the path; a small set arrives in ONE
+    // bounded collect, with the subsample draws of every round computed
+    // by the same `keepCol` the distributed path uses
+    val trees =
+      if (rows <= localMaxRows)
+        fitOnDriver(binned.select(binCols.map(col) ++ Seq(col("_y")) ++
+            (if (p.subsample >= 1.0) Nil
+             else Seq(array((0 until p.rounds).map(keepCol(p, _)): _*)
+               .as("_keep"))): _*)
+          .coalesce(1).limit(localMaxRows.toInt).collect(),
+          featureCols.size, cuts, p)
+      else fitDistributed(binned, binCols, cuts, p)
+    Model(featureCols, trees, p.learningRate, p.baseScore)
+  }
+
+  /** Round `round`'s subsample mask over the binned frame's `_id`:
+    * 1.0 keeps the row, 0.0 masks it (g = h = 0, not counted). */
+  private def keepCol(p: Params, round: Int): Column =
+    if (p.subsample >= 1.0) lit(1.0)
+    else (Synthetic.u(col("_id"), salt = round, seed = p.seed) <
+      lit(p.subsample)).cast("double")
+
+  private def fitDistributed(binned: DataFrame, binCols: Seq[String],
+      cuts: Array[Array[Double]], p: Params): Seq[Node] = {
     // Binned frame materialized ONCE; margin evolves on top of it.
-    var work = df.select(baseCols: _*)
-      .withColumn("_m", lit(logit(p.baseScore)))
+    var work = binned.withColumn("_m", lit(logit(p.baseScore)))
       .localCheckpoint(true)
     var lastCkpt = work
     val trees = mutable.ArrayBuffer.empty[Node]
 
     for (round <- 0 until p.rounds) {
-      val tree = growTree(work, binCols, cuts, p, round)
+      val tree = growTree(new FrameRows(work, binCols, keepCol(p, round)),
+        cuts, p)
       trees += tree
 
       // Margin update: binned-column form of the tree, pure codegen.
@@ -325,34 +401,20 @@ object NewtonBoost {
       }
     }
     GraftShim.freeLocalCheckpoint(lastCkpt)
-    Model(featureCols, trees.toSeq, p.learningRate, p.baseScore)
+    trees.toSeq
   }
 
-  /** One tree, level-wise. Per level: one bounded histogram aggregate
-    * (the shuffle), driver split search (the allreduce consumer), one
+  /** Per level: one bounded histogram aggregate (the shuffle) and one
     * codegen node-routing update. */
-  private def growTree(work: DataFrame, binCols: Seq[String],
-      cuts: Array[Array[Double]], p: Params, round: Int): Node = {
-    val prob = lit(1.0) / (lit(1.0) + exp(-col("_m")))
-    val keep =
-      if (p.subsample >= 1.0) lit(1.0)
-      else (Synthetic.u(col("_id"), salt = round, seed = p.seed) <
-        lit(p.subsample)).cast("double")
-    val gCol = ((prob - col("_y")) * keep).as("_g")
-    val hCol = (prob * (lit(1.0) - prob) * keep).as("_h")
+  private final class FrameRows(work: DataFrame, binCols: Seq[String],
+      keep: Column) extends TreeRows {
+    private val prob = lit(1.0) / (lit(1.0) + exp(-col("_m")))
+    private val gCol = ((prob - col("_y")) * keep).as("_g")
+    private val hCol = (prob * (lit(1.0) - prob) * keep).as("_h")
+    private val levelCkpts = mutable.ArrayBuffer.empty[DataFrame]
+    private var frame = work.withColumn("_n", lit(0))
 
-    val levelCkpts = mutable.ArrayBuffer.empty[DataFrame]
-    val splits =
-      mutable.Map.empty[Int, (Int, Int, Double, Boolean, Double, Int, Int)]
-    val leaves = mutable.Map.empty[Int, Double]
-    // Stats a child inherits from its parent's chosen split — exact
-    // (decimal-summed) so depth-capped leaves need no extra job.
-    val childStats = mutable.Map.empty[Int, Cell]
-    var nextId = 1
-    var frame = work.withColumn("_n", lit(0))
-    var active: Seq[Int] = Seq(0)
-
-    for (_ <- 0 until p.maxDepth if active.nonEmpty) {
+    def histogram(active: Seq[Int]): Hist = {
       val hist = frame
         .filter(col("_n").isInCollection(active))
         .select(Seq(col("_n"),
@@ -368,16 +430,183 @@ object NewtonBoost {
           // (g=h=0) still satisfy cnt>0 and shift split choices.
           sum(col("_k")).as("c"))
         .collect()
-
-      // node -> feature -> bin -> Cell (bin -1 = missing).
-      val byNode = hist.groupBy(_.getInt(0)).map { case (n, rows) =>
+      hist.groupBy(_.getInt(0)).map { case (n, rows) =>
         n -> rows.groupBy(_.getInt(1)).map { case (f, rs) =>
           f -> rs.map(r => r.getInt(2) -> Cell(
             r.getDecimal(3).doubleValue, r.getDecimal(4).doubleValue,
             r.getLong(5))).toMap
         }
       }
+    }
 
+    def route(routes: Seq[Route]): Unit = {
+      // Route rows of split nodes to their children (codegen CASE).
+      var e: Column = col("_n")
+      for (s <- routes) {
+        val c = col(s"_b${s.f}")
+        val goLeft =
+          if (s.dl) (c === -1) || (c <= s.b) else (c =!= -1) && (c <= s.b)
+        e = when(col("_n") === s.node,
+          when(goLeft, lit(s.l)).otherwise(lit(s.r))).otherwise(e)
+      }
+      frame = frame.withColumn("_n", e)
+      // Deep levels must MATERIALIZE the routing: the lazy `_n` CASE
+      // chains across levels and inlines into the next level's
+      // histogram-aggregate codegen — at ≥16 active children the
+      // accumulated chain blows Janino's 64 KB method limit and the
+      // whole hot loop silently drops to interpreted mode ("Failed
+      // to compile" ERRORs, one per depth-≥5 round, r15). Shallow
+      // trees (the frozen-fixture configs, depth ≤ 3 → ≤ 8 children)
+      // never hit this branch, so their plans are byte-identical.
+      // Values are unaffected at any depth — pure lineage truncation.
+      if (2 * routes.size >= 16) {
+        val ckpt = frame.localCheckpoint(true)
+        levelCkpts += ckpt
+        frame = ckpt
+      }
+    }
+
+    override def close(): Unit = levelCkpts.foreach(GraftShim.freeLocalCheckpoint)
+  }
+
+  /** The replay of [[fitDistributed]] over the collected binned rows
+    * (`_b0.._b{k-1}`, `_y`, and with subsample < 1 the per-round
+    * `_keep` array). Margins, g/h, routing and the histogram sums are
+    * computed here exactly as the distributed Column expressions
+    * compute them, so both paths grow the identical trees. */
+  private def fitOnDriver(rows: Array[org.apache.spark.sql.Row], k: Int,
+      cuts: Array[Array[Double]], p: Params): Seq[Node] = {
+    val n = rows.length
+    val bins = Array.tabulate(k, n)((f, i) => rows(i).getInt(f))
+    val y = rows.map(r => if (r.isNullAt(k)) Double.NaN else r.getDouble(k))
+    val keeps: Option[Array[scala.collection.Seq[Any]]] =
+      if (p.subsample >= 1.0) None else Some(rows.map(_.getSeq[Any](k + 1)))
+    val m = Array.fill(n)(logit(p.baseScore))
+    (0 until p.rounds).map { round =>
+      val keep = (i: Int) => keeps.fold[java.lang.Double](1.0)(ks =>
+        ks(i)(round).asInstanceOf[java.lang.Double])
+      val tree = growTree(new DriverRows(bins, y, m, keep, cuts), cuts, p)
+      def eval(t: Node, i: Int): Double = t match {
+        case Leaf(w) => w
+        case Split(f, b, _, dl, _, l, r) =>
+          eval(if (goesLeft(bins(f)(i), b, dl)) l else r, i)
+      }
+      var i = 0
+      while (i < n) { m(i) = m(i) + p.learningRate * eval(tree, i); i += 1 }
+      tree
+    }
+  }
+
+  /** One tree's rows on the driver. Per row, g and h are the distributed
+    * path's doubles (`1/(1+StrictMath.exp(-m))`, Spark's `Exp`), each
+    * cast to DECIMAL(38,18) the way Spark's `Cast` does (the shortest
+    * decimal string of the double, rounded HALF_UP to 18 places) and
+    * summed exactly. Exact sums are order-free, so each cell's decimal,
+    * and the double read from it, equals the distributed aggregate's. */
+  private final class DriverRows(bins: Array[Array[Int]], y: Array[Double],
+      m: Array[Double], keep: Int => java.lang.Double,
+      cuts: Array[Array[Double]]) extends TreeRows {
+    private val n = m.length
+    private val node = new Array[Int](n)
+    // unscaled DECIMAL(38,18) g/h per row; a NULL (label or keep NULL,
+    // which SUM skips) is marked by gOk / kept. |g| ≤ 1 and h ≤ ¼, so each
+    // unscaled value fits a Long; sums split at bit 30 to stay exact.
+    private val g = new Array[Long](n)
+    private val h = new Array[Long](n)
+    private val gOk = new Array[Boolean](n)
+    private val kept = new Array[Byte](n) // keep: 1, 0, or -1 for NULL
+    locally {
+      var i = 0
+      while (i < n) {
+        val kp = keep(i)
+        if (kp != null) {
+          val prob = 1.0 / (1.0 + StrictMath.exp(-m(i)))
+          val gv = (prob - y(i)) * kp
+          gOk(i) = java.lang.Double.isFinite(gv)
+          if (gOk(i)) g(i) = dec18(gv)
+          h(i) = dec18(prob * (1.0 - prob) * kp)
+          kept(i) = kp.longValue.toByte
+        } else kept(i) = -1
+        i += 1
+      }
+    }
+
+    def histogram(active: Seq[Int]): Hist = {
+      val slotOf = Array.fill(active.max + 1)(-1)
+      active.zipWithIndex.foreach { case (a, j) => slotOf(a) = j }
+      // [slot][feature][bin + 1] accumulators
+      def acc() = Array.tabulate(active.size, bins.length)(
+        (_, f) => new Array[Long](cuts(f).length + 2))
+      val (gHi, gLo, hHi, hLo, cnt) = (acc(), acc(), acc(), acc(), acc())
+      val seen = Array.tabulate(active.size, bins.length)(
+        (_, f) => new Array[Boolean](cuts(f).length + 2))
+      var i = 0
+      while (i < n) {
+        val j = if (node(i) < slotOf.length) slotOf(node(i)) else -1
+        if (j >= 0) {
+          var f = 0
+          while (f < bins.length) {
+            val b = bins(f)(i) + 1
+            seen(j)(f)(b) = true
+            if (kept(i) >= 0) {
+              if (gOk(i)) {
+                gHi(j)(f)(b) += g(i) >> 30; gLo(j)(f)(b) += g(i) & 0x3FFFFFFFL
+              }
+              hHi(j)(f)(b) += h(i) >> 30; hLo(j)(f)(b) += h(i) & 0x3FFFFFFFL
+              cnt(j)(f)(b) += kept(i)
+            }
+            f += 1
+          }
+        }
+        i += 1
+      }
+      def dbl(hi: Long, lo: Long): Double = new java.math.BigDecimal(
+        java.math.BigInteger.valueOf(hi).shiftLeft(30)
+          .add(java.math.BigInteger.valueOf(lo)), 18).doubleValue
+      active.indices.filter(j => seen(j)(0).exists(identity)).map { j =>
+        active(j) -> bins.indices.map { f =>
+          f -> seen(j)(f).indices.filter(seen(j)(f)(_)).map { b =>
+            (b - 1) -> Cell(dbl(gHi(j)(f)(b), gLo(j)(f)(b)),
+              dbl(hHi(j)(f)(b), hLo(j)(f)(b)), cnt(j)(f)(b))
+          }.toMap
+        }.toMap
+      }.toMap
+    }
+
+    def route(routes: Seq[Route]): Unit = {
+      val byNode = routes.map(r => r.node -> r).toMap
+      var i = 0
+      while (i < n) {
+        byNode.get(node(i)).foreach { s =>
+          node(i) = if (s.goLeft(bins(s.f)(i))) s.l else s.r
+        }
+        i += 1
+      }
+    }
+  }
+
+  /** `x` cast to DECIMAL(38,18) as Spark's `Cast` codegen does
+    * (`Decimal(BigDecimal.valueOf(x))`, then `changePrecision` HALF_UP),
+    * as its unscaled value. */
+  private def dec18(x: Double): Long = java.math.BigDecimal.valueOf(x)
+    .setScale(18, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
+
+  /** One tree, level-wise: per level the histogram of the active nodes,
+    * the driver split search (the allreduce consumer), and the routing
+    * of split nodes' rows to their children. */
+  private def growTree(rows: TreeRows, cuts: Array[Array[Double]],
+      p: Params): Node = {
+    val splits =
+      mutable.Map.empty[Int, (Int, Int, Double, Boolean, Double, Int, Int)]
+    val leaves = mutable.Map.empty[Int, Double]
+    // Stats a child inherits from its parent's chosen split — exact
+    // (decimal-summed) so depth-capped leaves need no extra job.
+    val childStats = mutable.Map.empty[Int, Cell]
+    var nextId = 1
+    var active: Seq[Int] = Seq(0)
+
+    for (_ <- 0 until p.maxDepth if active.nonEmpty) {
+      val byNode = rows.histogram(active)
       val grown = mutable.ArrayBuffer.empty[Int]
       for (nodeId <- active) byNode.get(nodeId) match {
         case None => // no sampled rows reached this node this round
@@ -404,38 +633,12 @@ object NewtonBoost {
               leaves(nodeId) = leafWeight(total, p)
           }
       }
-
-      if (grown.nonEmpty) {
-        // Route rows of split nodes to their children (codegen CASE).
-        var e: Column = col("_n")
-        for (nodeId <- active; s <- splits.get(nodeId)) {
-          val (f, b, _, dl, _, l, r) = s
-          val c = col(s"_b$f")
-          val goLeft =
-            if (dl) (c === -1) || (c <= b) else (c =!= -1) && (c <= b)
-          e = when(col("_n") === nodeId,
-            when(goLeft, lit(l)).otherwise(lit(r))).otherwise(e)
-        }
-        frame = frame.withColumn("_n", e)
-        // Deep levels must MATERIALIZE the routing: the lazy `_n` CASE
-        // chains across levels and inlines into the next level's
-        // histogram-aggregate codegen — at ≥16 active children the
-        // accumulated chain blows Janino's 64 KB method limit and the
-        // whole hot loop silently drops to interpreted mode ("Failed
-        // to compile" ERRORs, one per depth-≥5 round, r15). Shallow
-        // trees (the frozen-fixture configs, depth ≤ 3 → ≤ 8 children)
-        // never hit this branch, so their plans are byte-identical.
-        // Values are unaffected at any depth — pure lineage truncation.
-        if (grown.size >= 16) {
-          val ckpt = frame.localCheckpoint(true)
-          levelCkpts += ckpt
-          frame = ckpt
-        }
-      }
+      if (grown.nonEmpty)
+        rows.route(for (nodeId <- active; s <- splits.get(nodeId))
+          yield Route(nodeId, s._1, s._2, s._4, s._6, s._7))
       active = grown.toSeq
     }
-    levelCkpts.foreach(GraftShim.freeLocalCheckpoint)
-    levelCkpts.clear()
+    rows.close()
     // Depth-capped nodes become leaves on their inherited stats.
     for (nodeId <- active)
       leaves(nodeId) = leafWeight(childStats(nodeId), p)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.DriverOps.concurrently
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.mllib.clustering.GraftLocalKMeans
@@ -631,20 +632,6 @@ object SimilaritySearch {
           seed, "k-means||")
       else fitKMeansDistributed(t, featCol, k, seed, 20, "k-means||")
     }
-
-  /** Independent fits run on a fixed pool of min(fits, 8) driver
-    * threads; results come back in input order. Each fit is a pure
-    * function of its inputs, so the result equals the serial run. */
-  private def concurrently[A](fits: Seq[() => A]): Seq[A] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(fits.size, 8)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try Await.result(Future.sequence(fits.map(f => Future(f()))), Duration.Inf)
-    finally pool.shutdown()
-  }
 
   /**
    * TRAINED IVF coarse centroids — seeded spherical k-means over unit

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.DriverOps.footerRows
+
 /**
  * Z-order (Morton-curve) data layout for multi-column data skipping —
  * the write-side twin of `Bucketing` (SURVEY §4 physical knobs).
@@ -310,16 +312,6 @@ object Layout {
     UpsertStats(newFiles.length, snapshot.length - affectedSet.size,
       matched, keys.length - matched)
   }
-
-  /** Rows in parquet `files` from their footers — the row-group counts a
-    * `count()` over the same files reads, without a Spark job. */
-  private def footerRows(conf: org.apache.hadoop.conf.Configuration,
-                         files: Iterable[org.apache.hadoop.fs.Path]): Long =
-    files.iterator.map { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
 
   /**
    * PATCH-one-row semantics over the [[upsertByKey]] transaction

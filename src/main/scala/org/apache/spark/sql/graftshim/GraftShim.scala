@@ -16,6 +16,11 @@ object GraftShim {
   def expr(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
+  /** `s` with every field, array element and map value nullable — the
+    * schema Spark's parquet writer stores and its reader returns. */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** Register a scalar expression builder as a SQL function. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =

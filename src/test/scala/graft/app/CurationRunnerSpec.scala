@@ -21,6 +21,11 @@ class CurationRunnerSpec extends SparkSpec {
     assert(report.results.map(_.stage) ===
       Seq("quality", "boilerplate", "clean", "corpus", "perplexity",
         "tokenizer", "mix", "split", "packed"))
+    // each stage's footer-counted records equal a scan of what it stored
+    report.results.foreach { r =>
+      assert(r.records === spark.read.parquet(s"$out/${r.stage}").count(),
+        s"stage ${r.stage}")
+    }
     // the funnel narrows: quality ⊇ boilerplate ⊇ clean ⊇ corpus ⊇
     // perplexity = tokenizer ⊇ mix = split
     assert(report.count("quality") >= report.count("boilerplate"))
@@ -185,6 +190,10 @@ class CurationRunnerSpec extends SparkSpec {
     assert(r2.results.map(_.status).forall(_ == "cached"))
     assert(r2.results.map(r => (r.stage, r.records)) ===
       r1.results.map(r => (r.stage, r.records)))
+    r2.results.foreach { r =>
+      assert(r.records === spark.read.parquet(s"$out/${r.stage}").count(),
+        s"stage ${r.stage}")
+    }
     // simulate a crash after 'mix': split/packed artifacts gone
     def rmrf(p: java.io.File): Unit = {
       if (p.isDirectory) p.listFiles().foreach(rmrf)

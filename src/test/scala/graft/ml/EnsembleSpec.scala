@@ -83,6 +83,19 @@ class EnsembleSpec extends SparkSpec {
       s"scaled AUC $aucScaled vs unscaled $aucUnscaled drifted past tolerance")
   }
 
+  test("two concurrent fits in one session score identically (slots " +
+      "fit concurrently inside each, too)") {
+    val ens = new Ensemble(featureCols,
+      numTrees = 5, rfDepth = 4, xgbIter = 3, gbtIter = 3, mlpIter = 10)
+    val (tr, va) = ens.split(pairs)
+    val Seq(a, b) = graft.DriverOps.concurrently(Seq(
+      () => ens.fit(tr), () => ens.fit(tr)))
+    def rows(m: EnsembleModel) = m.scoreAll(va).orderBy("id").collect().toSeq
+    val ra = rows(a)
+    assert(ra.nonEmpty)
+    assert(ra === rows(b))
+  }
+
   test("weighted vote matches hand-computed weights on model scores") {
     val (ens, model) = fitted
     val (_, va) = ens.split(pairs)

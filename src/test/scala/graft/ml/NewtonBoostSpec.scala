@@ -109,6 +109,106 @@ class NewtonBoostSpec extends SparkSpec {
     val b = NewtonBoost.fit(train.repartition(13),
       MetricsLedger.featureCols, "label", params)
     assert(a.toJson == b.toJson)
+    // the distributed histograms too (both fits above replay on the driver)
+    assert(distributed(train.repartition(13), params).toJson == a.toJson)
+  }
+
+  // ---- driver replay (≤ 65 536 rows) vs the distributed histograms
+
+  private def distributed(df: DataFrame, params: NewtonBoost.Params,
+      idCol: Option[String] = None) =
+    NewtonBoost.fitWith(df, MetricsLedger.featureCols, "label", params,
+      idCol, localMaxRows = -1L)
+
+  private def leafBits(m: NewtonBoost.Model): Seq[Long] = {
+    def walk(n: NewtonBoost.Node): Seq[Long] = n match {
+      case NewtonBoost.Leaf(w) => Seq(java.lang.Double.doubleToRawLongBits(w))
+      case s: NewtonBoost.Split =>
+        java.lang.Double.doubleToRawLongBits(s.nodeValue) +:
+          (walk(s.left) ++ walk(s.right))
+    }
+    m.trees.flatMap(walk)
+  }
+
+  private def assertSameModel(local: NewtonBoost.Model, dist: NewtonBoost.Model) = {
+    assert(local.toJson == dist.toJson)
+    assert(leafBits(local) == leafBits(dist))
+  }
+
+  /** Most splits on one level of any tree — ≥ 8 means ≥ 16 children, the
+    * distributed path's level-checkpoint branch. */
+  private def widestLevel(m: NewtonBoost.Model): Int = {
+    def level(ns: Seq[NewtonBoost.Node]): Int =
+      if (ns.isEmpty) 0
+      else {
+        val splits = ns.collect { case s: NewtonBoost.Split => s }
+        math.max(splits.size, level(splits.flatMap(s => Seq(s.left, s.right))))
+      }
+    m.trees.map(t => level(Seq(t))).max
+  }
+
+  test("driver replay == distributed fit bit for bit: depth 6 (level " +
+      "checkpoints), NULL features") {
+    val (train, _) = fixture
+    val params = NewtonBoost.Params(rounds = 3, maxDepth = 6,
+      learningRate = 0.3, maxBins = 16)
+    val local = NewtonBoost.fit(train, MetricsLedger.featureCols, "label", params)
+    assertSameModel(local, distributed(train, params))
+    assert(widestLevel(local) >= 8, "fixture never reached 16 active children")
+    // NULL-bearing features: the missing bin and learned default directions
+    val holes = train
+      .withColumn("size_ratio",
+        when(pmod(hash(col("account1_id")), lit(5)) === 0, lit(null))
+          .otherwise(col("size_ratio")))
+      .withColumn("rev_sum",
+        when(pmod(hash(col("account2_id")), lit(7)) === 0, lit(null))
+          .otherwise(col("rev_sum")))
+    val p2 = params.copy(maxDepth = 4)
+    val withNulls = NewtonBoost.fit(holes, MetricsLedger.featureCols, "label", p2)
+    assert(withNulls.toJson.contains("\"dl\":false"))
+    assertSameModel(withNulls, distributed(holes, p2))
+  }
+
+  test("driver replay == distributed fit bit for bit: λ/γ/α/" +
+      "min_child_weight and subsample = 0.7") {
+    val (train, _) = fixture
+    val base = NewtonBoost.Params(rounds = 3, maxDepth = 3,
+      learningRate = 0.3, maxBins = 16)
+    for (p <- Seq(base.copy(lambda = 5.0), base.copy(gamma = 0.5),
+        base.copy(alpha = 2.0), base.copy(minChildWeight = 20.0)))
+      assertSameModel(
+        NewtonBoost.fit(train, MetricsLedger.featureCols, "label", p),
+        distributed(train, p))
+    val keyed = train.withColumn("pair_id",
+      concat_ws("|", col("account1_id"), col("account2_id")))
+    val sub = base.copy(subsample = 0.7)
+    assertSameModel(
+      NewtonBoost.fit(keyed, MetricsLedger.featureCols, "label", sub,
+        idCol = Some("pair_id")),
+      distributed(keyed, sub, Some("pair_id")))
+  }
+
+  test("a ≤ 65 536-row fit runs at most 3 Spark jobs: the cut-and-count " +
+      "aggregate and one bounded collect, none per tree level") {
+    val (train, _) = fixture
+    val input = train.coalesce(1).cache()
+    input.count()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      NewtonBoost.fit(input, MetricsLedger.featureCols, "label",
+        NewtonBoost.Params(rounds = 2, maxDepth = 6, learningRate = 0.1))
+      org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    input.unpersist()
+    assert(jobs.get() <= 3, s"${jobs.get()} jobs")
   }
 
   test("subsampled fit is deterministic given the id column") {

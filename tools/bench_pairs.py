@@ -18,8 +18,15 @@ A gain is claimed only when at least ten pairs ran, the change won at least nine
 tenths of them, and the medians differ by more than the parent's IQR (the pair rule); a metric
 whose change median is worse than the parent's by more than its bound is
 flagged.
+
+Each checkout's benchmark stores an output fingerprint per workload and seed
+under .bench_build/fingerprints/ and checks later runs only against its own.
+After the pairs, the script compares the two checkouts' fingerprint files for
+every seed run, prints each difference, and exits non-zero with "outputs
+differ" when any file differs or exists on one side only.
 """
 import argparse
+import glob
 import json
 import os
 import statistics
@@ -36,6 +43,26 @@ def run_side(checkout, workload, seed, seconds, trace):
     if p.returncode != 0 or not lines:
         return None
     return json.loads(lines[-1])
+
+
+def fingerprint_diffs(sides, workload, seeds):
+    """(file name, parent text, change text) for every fingerprint of
+    `workload` at `seeds` that differs between the checkouts; None marks a
+    file missing on that side."""
+    diffs = []
+    for seed in sorted(set(seeds)):
+        texts = {}
+        for side, checkout in sides.items():
+            pattern = os.path.join(checkout, ".bench_build", "fingerprints",
+                                   f"{workload}-{seed}-*.txt")
+            for path in glob.glob(pattern):
+                with open(path) as fh:
+                    texts.setdefault(os.path.basename(path), {})[side] = fh.read()
+        for name, by_side in sorted(texts.items()):
+            p, c = by_side.get("parent"), by_side.get("change")
+            if p != c:
+                diffs.append((name, p, c))
+    return diffs
 
 
 def quartiles(xs):
@@ -124,6 +151,14 @@ def main():
                 verdicts.append(f"BOUND EXCEEDED ({worse_by:+.1%} vs {bound:.0%})")
         print(f"{name:<32} {cell(pmed, pq1, pq3):>30} {cell(cmed, cq1, cq3):>30} "
               f"{wins:>3}/{len(pairs):<3} {'; '.join(verdicts)}")
+
+    diffs = fingerprint_diffs(sides, a.workload, a.seeds)
+    for name, p, c in diffs:
+        print(f"fingerprint {name}: parent {p!r} vs change {c!r}")
+    if diffs:
+        print(f"outputs differ: {len(diffs)} fingerprint file(s)")
+        sys.exit(1)
+    print(f"outputs identical: fingerprints of seeds {' '.join(map(str, a.seeds))} match")
 
 
 if __name__ == "__main__":
