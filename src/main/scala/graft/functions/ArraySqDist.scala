@@ -78,14 +78,20 @@ object ArraySqDist {
     * null (boxed) on length mismatch or null element — same as the
     * zip_with/aggregate formulation it replaces. */
   def compute(a: ArrayData, b: ArrayData,
+              aFloat: Boolean, bFloat: Boolean): java.lang.Double =
+    compute(a, 0, a.numElements(), b, aFloat, bFloat)
+
+  /** [[compute]] of `a`'s elements `aOff until aOff + n` against `b` —
+    * `slice(a, aOff + 1, n)` without materializing the slice (the PQ
+    * encoder's per-subspace distance, [[ArrayPqEncode]]). */
+  def compute(a: ArrayData, aOff: Int, n: Int, b: ArrayData,
               aFloat: Boolean, bFloat: Boolean): java.lang.Double = {
-    val n = a.numElements()
     if (n != b.numElements()) return null
     var s = 0.0
     var i = 0
     while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      if (a.isNullAt(aOff + i) || b.isNullAt(i)) return null
+      val x = if (aFloat) a.getFloat(aOff + i).toDouble else a.getDouble(aOff + i)
       val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
       val d = x - y
       s += d * d

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
 
 import graft.DriverOps.concurrently
 import graft.functions.VectorFunctions._
@@ -273,28 +276,58 @@ object SimilaritySearch {
       .select(col("s"), col("cid"),
         slice(col("cv"), col("s") * subDim + 1, lit(subDim)).as("cvs"))
 
+  /** The most (s, cid, cvs) rows a codebook may have: [[pqCodesSub]] and
+    * [[binaryAdcRefinedTopK]] collect it to the driver and bind it into the
+    * plan as one literal. */
+  val MaxCodebookRows = 65536
+
+  /** The codebook (s, cid, cvs) collected in one job, at most
+    * [[MaxCodebookRows]] rows, with s as int; rows with a null s are
+    * dropped (no subspace joins them), a null cid is refused. */
+  private def collectCodebook(codebookSub: DataFrame)
+      : (Seq[Row], StructType) = {
+    val cb = codebookSub.select(col("s").cast("int").as("s"), col("cid"),
+        col("cvs"))
+      .filter(col("s").isNotNull)
+    val rows = cb.coalesce(1).limit(MaxCodebookRows + 1).collect().toSeq
+    require(rows.size <= MaxCodebookRows,
+      s"the PQ codebook has more than MaxCodebookRows = $MaxCodebookRows " +
+        "(s, cid, cvs) rows; it is bound into the plan as one literal")
+    require(rows.forall(!_.isNullAt(1)), "the PQ codebook has a null cid")
+    (rows, cb.schema)
+  }
+
+  /** (s, cid, cvs) rows as the one array literal [[ArrayPqEncode]] reads. */
+  private def codebookLit(rows: Seq[Row], schema: StructType): Column =
+    GraftShim.column(Literal.create(rows, ArrayType(schema)))
+
+  private def pqEncode(vecCol: Column, codebook: Column, m: Int,
+                       subDim: Int): Column =
+    GraftShim.column(graft.functions.ArrayPqEncode(GraftShim.expr(vecCol),
+      GraftShim.expr(codebook), m, subDim))
+
   /**
    * PQ encoding: each vector → m one-byte-ish codes, one per `subDim`-wide
-   * subspace — the per-subspace L2 argmin over the BROADCAST codebook
-   * (s, cid, cvs), joined by subspace. Encoding is scan-local (broadcast
-   * join + argmax partial agg: the shuffle carries one row per (vector,
-   * subspace), never per candidate centroid — the q72 assignAgainst
-   * discipline, improving on a window rank). Ties break to the lowest
-   * cid via max(struct(−d, −cid)). The sub-distance widens each element
-   * to double BEFORE the subtraction (float−float stays float32 and
-   * drifts off a double oracle). Returns (id, s, cid).
+   * subspace — the per-subspace L2 argmin against the codebook (s, cid,
+   * cvs), computed per row by the [[graft.functions.ArrayPqEncode]] kernel
+   * and exploded to one row per subspace. Ties break to the lowest cid;
+   * distances are [[graft.functions.ArraySqDist]]'s, each element widened
+   * to double BEFORE the subtraction (float−float stays float32 and drifts
+   * off a double oracle). Returns (id, s, cid).
+   *
+   * Job shape: one job collects the codebook (at most [[MaxCodebookRows]]
+   * rows; the broadcast join this replaced pulled it through the driver
+   * too), which the plan binds as one array literal; the encode itself is
+   * scan-local — no shuffle, no join, one row out per (vector, subspace).
    */
   def pqCodesSub(vecs: DataFrame, idCol: Column, vecCol: Column,
-                 codebookSub: DataFrame, m: Int, subDim: Int): DataFrame =
-    vecs.select(idCol.as("id"), vecCol.as("v"),
-        explode(sequence(lit(0), lit(m - 1))).as("s"))
-      .join(broadcast(codebookSub), Seq("s"))
-      .select(col("id"), col("s"),
-        struct((-sqDist(slice(col("v"), col("s") * subDim + 1, lit(subDim)),
-            col("cvs"))).as("nd"),
-          (-col("cid")).as("ncid")).as("sc"))
-      .groupBy("id", "s").agg(max(col("sc")).as("mx"))
-      .select(col("id"), col("s"), (-col("mx.ncid")).as("cid"))
+                 codebookSub: DataFrame, m: Int, subDim: Int): DataFrame = {
+    val (rows, schema) = collectCodebook(codebookSub)
+    vecs.select(idCol.as("id"),
+        posexplode(pqEncode(vecCol, codebookLit(rows, schema), m, subDim)))
+      .select(col("id"), col("pos").as("s"), col("col").as("cid"))
+      .filter(col("cid").isNotNull)
+  }
 
   /** The flat ADC tail: codes (id, s, cid) + codebook (s, cid, cvs) +
     * query → per-candidate table-lookup distance, top-k. The lookup
@@ -949,20 +982,13 @@ object SimilaritySearch {
    * cheapest candidate-generation scan there is (the standard
    * binary-embedding serving trick; re-rank survivors by exact metric
    * exactly like [[refineTopK]]). Bit i of word w = (v[w·64+i] > 0) —
-   * the zero-threshold sign code, reproducible on any engine.
+   * the zero-threshold sign code, reproducible on any engine. One
+   * scan-local [[graft.functions.ArraySignCode]] call per row; a vector
+   * shorter than `dims` fails under ANSI mode as `element_at` does.
    */
-  def binarySignCode(vecCol: Column, dims: Int): Column = {
-    require(dims >= 1, s"dims must be positive (got $dims)")
-    val words = (dims + 63) / 64
-    array((0 until words).map { w =>
-      val lo = w * 64
-      val hi = math.min(dims, lo + 64)
-      (lo until hi).map(i =>
-        when(element_at(vecCol, i + 1).cast("double") > 0,
-          lit(1L << (i - lo))).otherwise(lit(0L)))
-        .reduce(_ + _)
-    }: _*)
-  }
+  def binarySignCode(vecCol: Column, dims: Int): Column =
+    GraftShim.column(graft.functions.ArraySignCode(GraftShim.expr(vecCol),
+      dims))
 
   /** Hamming distance between two packed code arrays: per-word
     * xor+popcount, summed in word order — the codegen
@@ -974,17 +1000,13 @@ object SimilaritySearch {
     GraftShim.column(graft.functions.ArrayHammingSum(GraftShim.expr(a),
       GraftShim.expr(b)))
 
-  /** The driver-side twin of [[binarySignCode]] for a literal query
-    * vector. */
+  /** [[binarySignCode]] of a literal query vector, computed on the driver
+    * by the same kernel. */
   def binarySignCodeLocal(v: Seq[Double], dims: Int): Seq[Long] = {
     require(v.length == dims, s"query has ${v.length} dims, expected $dims")
-    val words = (dims + 63) / 64
-    (0 until words).map { w =>
-      val lo = w * 64
-      val hi = math.min(dims, lo + 64)
-      (lo until hi).foldLeft(0L)((acc, i) =>
-        if (v(i) > 0) acc | (1L << (i - lo)) else acc)
-    }
+    graft.functions.ArraySignCode.compute(
+      UnsafeArrayData.fromPrimitiveArray(v.toArray), dims, vFloat = false,
+      failOnError = true).toLongArray().toSeq
   }
 
   /** Binary-code top-k: one packed-code projection + xor/popcount scan
@@ -992,7 +1014,7 @@ object SimilaritySearch {
     * (id, hamming, rank). */
   def binaryHammingTopK(embs: DataFrame, idCol: Column, vecCol: Column,
                         query: Seq[Double], dims: Int, k: Int): DataFrame = {
-    val qCode = array(binarySignCodeLocal(query, dims).map(lit): _*)
+    val qCode = lit(binarySignCodeLocal(query, dims).toArray)
     TopK.globalTopK(
       embs.select(idCol.as("id"),
         hammingDistance(binarySignCode(vecCol, dims), qCode).as("hamming")),
@@ -1080,9 +1102,20 @@ object SimilaritySearch {
    * computed here from the shortlist's raw vectors — a production
    * deployment point-reads stored codes, the q143 layout note);
    * stage-2 re-scores the `refineFactor`·k ADC survivors by exact
-   * cosine ([[refineTopK]]). No stage has a coverage ceiling — every
-   * vector is a stage-0 candidate — which is why the measured curve
-   * dominates the probed-IVF curve on both axes (q211 vs q204).
+   * cosine ([[refineTopK]]'s order). No stage has a coverage ceiling —
+   * every vector is a stage-0 candidate — which is why the measured
+   * curve dominates the probed-IVF curve on both axes (q211 vs q204).
+   *
+   * Job shape: one job collects the codebook (at most [[MaxCodebookRows]]
+   * rows; the broadcast it replaced pulled it through the driver too),
+   * and ONE job runs the chained plan — three top-k's, each carrying the
+   * raw vector to the next: Hamming top-C; ADC top-R, the fixed-order
+   * d0+d1+…+d(m−1) sum of lookups into the query's m×k table (built on
+   * the driver from the collected codebook, the [[adcTopKSub]] distances
+   * bit for bit), indexed by [[graft.functions.ArrayPqEncode]]'s codes;
+   * exact-cosine top-k. The query vector, its sign code and the table are
+   * each bound as one array literal, so a new query reuses the generated
+   * classes. Ids are unique in `embs`. Returns (id, cosine, rank).
    */
   def binaryAdcRefinedTopK(embs: DataFrame, idCol: Column, vecCol: Column,
                            codebookSub: DataFrame, m: Int, subDim: Int,
@@ -1092,16 +1125,52 @@ object SimilaritySearch {
     require(candidates >= 1, s"candidates must be >= 1 (got $candidates)")
     require(refineFactor >= 1,
       s"refineFactor must be >= 1 (got $refineFactor)")
-    val ev = embs.select(idCol.as("id"),
-      vecCol.cast("array<double>").as("v"))
-    val short0 = binaryHammingTopK(ev, col("id"), col("v"), query, dims,
-      candidates)
-    val shortVecs = ev.join(broadcast(short0.select("id")), Seq("id"),
-      "left_semi")
-    val codes = pqCodesSub(shortVecs, col("id"), col("v"), codebookSub,
+    val (rows, schema) = collectCodebook(codebookSub)
+    // each subspace's entries in cid order: entry j codes j, so the
+    // lowest-cid tie rule holds and a code indexes the query's table row
+    val bySub = rows.groupBy(_.getInt(0)).view
+      .mapValues(_.sortBy(r => r.get(1).asInstanceOf[Number].longValue))
+      .toMap
+    require((0 until m).forall(bySub.contains),
+      s"the PQ codebook lacks a subspace in 0 until $m")
+    val width = bySub.values.map(_.size).max
+    val cvsFloat =
+      schema("cvs").dataType.asInstanceOf[ArrayType].elementType == FloatType
+    val q = UnsafeArrayData.fromPrimitiveArray(query.toArray)
+    val table = new Array[java.lang.Double](m * width)
+    val positional = (0 until m).flatMap { s =>
+      bySub(s).zipWithIndex.map { case (r, j) =>
+        val off = s * subDim
+        if (!r.isNullAt(2))
+          table(s * width + j) = graft.functions.ArraySqDist.compute(q, off,
+            if (off >= dims) 0 else math.min(subDim, dims - off),
+            new GenericArrayData(r.getSeq[Any](2).toArray), false, cvsFloat)
+        Row(s, j, r.get(2))
+      }
+    }
+    val positionalSchema = StructType(Seq(schema("s"),
+      StructField("cid", IntegerType, nullable = false), schema("cvs")))
+    // norm(q) would fold into an inlined scalar: a class per query
+    val qv = GraftShim.column(graft.functions.NoFold(
+      GraftShim.expr(lit(query.toArray))))
+    val byHamming = embs.select(idCol.as("id"),
+        vecCol.cast("array<double>").as("v"))
+      .select(col("id"), col("v"), hammingDistance(binarySignCode(col("v"),
+        dims), lit(binarySignCodeLocal(query, dims).toArray)).as("hamming"))
+      .orderBy(col("hamming").asc, col("id").asc).limit(candidates)
+    // ONE projection over the top-C: the planner fuses Limit(Project(Sort))
+    // into a top-k that evaluates the projection on the C survivors only
+    val codes = pqEncode(col("v"), codebookLit(positional, positionalSchema),
       m, subDim)
-    refineTopK(ev, col("id"), col("v"),
-      adcTopKSub(codes, codebookSub, query, m, subDim, refineFactor * k),
-      query, k)
+    val tableLit = lit(table)
+    val adc = (0 until m).map(s =>
+        element_at(tableLit, element_at(codes, s + 1) + (s * width + 1)))
+      .reduce(_ + _)
+    val byAdc = byHamming.select(col("id"), col("v"), adc.as("_t"))
+      .orderBy(col("_t").asc, col("id").asc).limit(refineFactor * k)
+    TopK.globalTopK(
+      byAdc.select(col("id"), cosine(col("v"), qv).as("cosine"))
+        .filter(col("cosine").isNotNull),
+      Seq(col("cosine").desc, col("id").asc), k)
   }
 }

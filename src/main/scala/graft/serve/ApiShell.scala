@@ -24,10 +24,17 @@ import graft.sources.ResilientClient.{Clock, TokenBucket}
  * is spec-driven (`ApiShellSpec`); the engine side stays [[Serve]].
  *
  * Scale: policy state (users, buckets) is driver-side and O(clients);
- * every data operation is a Spark plan over the recommendations frame —
- * nothing here collects.
+ * every data operation is a Spark plan over the recommendations frame.
+ * One route collects: `insights` runs its aggregates as one pass and
+ * returns the sections as local frames, collecting at most
+ * [[MaxInsightRows]] aggregate rows plus the 5-row top list; more groups
+ * than that fail the request with a message naming the bound.
  */
 object ApiShell {
+
+  /** The most rows `insights`' aggregate pass may collect: the summary, one
+    * per industry and per action, and one per trend day (≤ 366). */
+  val MaxInsightRows = 10000
 
   final case class User(username: String, password: String, role: String)
 
@@ -444,7 +451,14 @@ object ApiShell {
       * summary stats, top-5 opportunities, industry breakdown, action
       * distribution, daily trend — all over the days_back window
       * anchored at `asOf` (frozen, never wall-clock: the A6
-      * discipline). days_back validated 1..365 (:646, FastAPI 422). */
+      * discipline). days_back validated 1..365 (:646, FastAPI 422).
+      *
+      * The summary, both breakdowns and the trend are ONE `groupingSets`
+      * aggregate over [[Serve]]'s own aggregate columns, split on the
+      * driver by `grouping_id()`; it runs concurrently with the top-5
+      * page. Each section is a local frame with its per-section plan's
+      * schema (a NULL breakdown key stays its own group). The aggregate
+      * collects at most [[MaxInsightRows]] rows. */
     def insights(daysBack: Int, asOf: java.sql.Timestamp,
                  bearer: Option[String],
                  clientHost: Option[String] = None,
@@ -457,18 +471,75 @@ object ApiShell {
         else {
           val cutoff = new java.sql.Timestamp(
             asOf.getTime - daysBack.toLong * 86400 * 1000)
-          val windowed = recs.filter(col("created_at") >= cutoff)
-          OkSections(Map(
-            "summary" -> Serve.insightsSummary(windowed),
-            "top_opportunities" ->
-              Serve.page(windowed, "score", ascending = false,
-                limit = 5, offset = 0),
-            "industry_breakdown" -> Serve.breakdown(windowed, industry),
-            "action_distribution" -> Serve.breakdown(windowed, action),
-            "trend_data" -> Serve.dailyTrend(windowed, col("created_at"),
-              lit(asOf), daysBack)))
+          OkSections(insightSections(
+            recs.filter(col("created_at") >= cutoff), daysBack, asOf,
+            industry, action))
         }
       }
+
+    private def insightSections(windowed: DataFrame, daysBack: Int,
+                                asOf: java.sql.Timestamp,
+                                industry: org.apache.spark.sql.Column,
+                                action: org.apache.spark.sql.Column)
+        : Map[String, DataFrame] = {
+      import org.apache.spark.sql.Row
+      import scala.jdk.CollectionConverters._
+      val createdAt = col("created_at")
+      // the per-section plans give each section its schema; only the
+      // summary of an empty window is ever executed from them
+      val summary = Serve.insightsSummary(windowed)
+      val byIndustry = Serve.breakdown(windowed, industry)
+      val byAction = Serve.breakdown(windowed, action)
+      val trend = Serve.dailyTrend(windowed, createdAt, lit(asOf), daysBack)
+      val top = Serve.page(windowed, "score", ascending = false, limit = 5,
+        offset = 0)
+      val sAggs = Serve.summaryAggs()
+      val bAggs = Serve.breakdownAggs()
+      val tAggs = Serve.trendAggs()
+      // a row outside the trend's window has a NULL day, a group the
+      // trend drops (created_at is never NULL inside the window)
+      val keys = Seq(industry.as("_ind"), action.as("_act"),
+        when(Serve.inTrend(createdAt, lit(asOf), daysBack),
+          Serve.trendDay(createdAt)).as("_day"))
+      val Seq(ind, act, day) = Seq("_ind", "_act", "_day").map(col)
+      val fused = windowed.select(keys :+ col("*"): _*)
+        .groupingSets(Seq(Nil, Seq(ind), Seq(act), Seq(day)), ind, act, day)
+        .agg(grouping_id().as("_gid"), sAggs ++ bAggs ++ tAggs: _*)
+      val Seq(aggRows, topRows) = graft.DriverOps.concurrently(Seq(
+        () => fused.coalesce(1).limit(MaxInsightRows + 1).collect(),
+        () => top.collect()))
+      require(aggRows.length <= MaxInsightRows,
+        s"insights: more than MaxInsightRows = $MaxInsightRows summary, " +
+          "breakdown and trend rows")
+      // row layout: _ind, _act, _day, _gid, summary, breakdown, trend aggs
+      val sAt = 4
+      val bAt = sAt + sAggs.size
+      val tAt = bAt + bAggs.size
+      def cells(r: Row, from: Int, n: Int): Seq[Any] =
+        (from until from + n).map(r.get)
+      // grouping_id: bit 2 = _ind aggregated, bit 1 = _act, bit 0 = _day
+      def rowsOf(gid: Int) = aggRows.filter(_.getLong(3) == gid).toSeq
+      def local(df: DataFrame, rows: Seq[Row]): DataFrame =
+        windowed.sparkSession.createDataFrame(rows.asJava, df.schema)
+      val summaryRows =
+        rowsOf(7).map(r => Row.fromSeq(cells(r, sAt, sAggs.size)))
+      val trendRows = rowsOf(6).filter(!_.isNullAt(2))
+        .map(r => Row.fromSeq(r.get(2) +: cells(r, tAt, tAggs.size)))
+        .sortBy(_.get(0) match {
+          case d: java.sql.Date => d.toLocalDate.toEpochDay
+          case d: java.time.LocalDate => d.toEpochDay
+        })
+      Map(
+        // grouping sets emit no grand total over an empty window
+        "summary" -> local(summary,
+          if (summaryRows.nonEmpty) summaryRows else summary.collect().toSeq),
+        "top_opportunities" -> local(top, topRows.toSeq),
+        "industry_breakdown" -> local(byIndustry, rowsOf(3).map(r =>
+          Row.fromSeq(r.get(0) +: cells(r, bAt, bAggs.size)))),
+        "action_distribution" -> local(byAction, rowsOf(5).map(r =>
+          Row.fromSeq(r.get(1) +: cells(r, bAt, bAggs.size)))),
+        "trend_data" -> local(trend, trendRows))
+    }
 
     /** GET /api/accounts/{id}/summary (main.py:780-791): the stored
       * NLP summary ([[Summarize]]-produced engine-side). */

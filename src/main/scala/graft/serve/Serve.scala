@@ -71,13 +71,21 @@ object Serve {
   /** Insights summary (reference: api/main.py:663-676 A3): one row of
     * count / total value / avg score / high-value count / avg deal size. */
   def insightsSummary(df: DataFrame, score: Column = col("score"),
-                      value: Column = col("estimated_value")): DataFrame =
-    df.agg(
-      count(lit(1)).as("total_recommendations"),
-      sum(value).as("total_estimated_value"),
-      avg(score).as("avg_score"),
-      sum((score > 0.8).cast("long")).as("high_value_count"),
-      avg(value).as("avg_deal_size"))
+                      value: Column = col("estimated_value")): DataFrame = {
+    val aggs = summaryAggs(score, value)
+    df.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** [[insightsSummary]]'s aggregates; `ApiShell.insights` computes them in
+    * its one grouping-sets pass. */
+  private[serve] def summaryAggs(score: Column = col("score"),
+                                 value: Column = col("estimated_value"))
+      : Seq[Column] = Seq(
+    count(lit(1)).as("total_recommendations"),
+    sum(value).as("total_estimated_value"),
+    avg(score).as("avg_score"),
+    sum((score > 0.8).cast("long")).as("high_value_count"),
+    avg(value).as("avg_deal_size"))
 
   /** Health/status counts (reference: api/main.py health + status
     * endpoints, A8): one (entity, n) row per tracked frame. Each count
@@ -113,20 +121,39 @@ object Serve {
 
   /** Per-dimension breakdown (reference: api/main.py:725-747 A4/A5). */
   def breakdown(df: DataFrame, dim: Column, score: Column = col("score"),
-                value: Column = col("estimated_value")): DataFrame =
-    df.groupBy(dim).agg(
-      count(lit(1)).as("n"),
-      sum(value).as("total_value"),
-      avg(score).as("avg_score"))
+                value: Column = col("estimated_value")): DataFrame = {
+    val aggs = breakdownAggs(score, value)
+    df.groupBy(dim).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** [[breakdown]]'s aggregates per group. */
+  private[serve] def breakdownAggs(score: Column = col("score"),
+                                   value: Column = col("estimated_value"))
+      : Seq[Column] = Seq(
+    count(lit(1)).as("n"),
+    sum(value).as("total_value"),
+    avg(score).as("avg_score"))
 
   /** Daily trend, last `days` days from `asOf` (reference:
     * api/main.py:750-761 A6 — frozen asOf, not now(); SURVEY §7.4.3). */
   def dailyTrend(df: DataFrame, createdAt: Column, asOf: Column,
-                 days: Int, value: Column = col("estimated_value")): DataFrame =
-    df.filter(createdAt >= date_sub(asOf, days))
-      .groupBy(to_date(createdAt).as("day"))
-      .agg(count(lit(1)).as("n"), sum(value).as("total_value"))
+                 days: Int, value: Column = col("estimated_value")): DataFrame = {
+    val aggs = trendAggs(value)
+    df.filter(inTrend(createdAt, asOf, days))
+      .groupBy(trendDay(createdAt))
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy("day")
+  }
+
+  /** [[dailyTrend]]'s row filter, group key and aggregates. */
+  private[serve] def inTrend(createdAt: Column, asOf: Column,
+                             days: Int): Column =
+    createdAt >= date_sub(asOf, days)
+  private[serve] def trendDay(createdAt: Column): Column =
+    to_date(createdAt).as("day")
+  private[serve] def trendAggs(value: Column = col("estimated_value"))
+      : Seq[Column] =
+    Seq(count(lit(1)).as("n"), sum(value).as("total_value"))
 
   /** Export (reference: api/main.py:794-858 S13). */
   def exportCsv(df: DataFrame, path: String): Unit =

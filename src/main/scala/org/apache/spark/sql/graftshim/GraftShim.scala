@@ -21,6 +21,12 @@ object GraftShim {
   def asNullable(s: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = s.asNullable
 
+  /** The error ANSI `element_at` raises for an index past the array's
+    * end (INVALID_ARRAY_INDEX_IN_ELEMENT_AT). */
+  def elementAtIndexError(index: Int, numElements: Int): Throwable =
+    org.apache.spark.sql.errors.QueryExecutionErrors
+      .invalidElementAtIndexError(index, numElements, null)
+
   /** Register a scalar expression builder as a SQL function. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =

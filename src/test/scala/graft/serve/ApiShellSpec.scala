@@ -34,13 +34,14 @@ class ApiShellSpec extends SparkSpec {
     .withColumn("created_at", col("created_at_s").cast("timestamp"))
     .drop("created_at_s")
 
-  private def mkShell(callsPerMinute: Int = 100)
+  private def mkShell(callsPerMinute: Int = 100,
+                      frame: => org.apache.spark.sql.DataFrame = recs)
       : (Shell, VClock, UserStore, TokenService) = {
     val clock = new VClock
     val users = new UserStore
     users.put(User("alice", "s3cret", "admin"))
     val tokens = new TokenService("test-secret", clock, expirationHours = 1)
-    (new Shell(recs, users, tokens, clock, callsPerMinute),
+    (new Shell(frame, users, tokens, clock, callsPerMinute),
       clock, users, tokens)
   }
 
@@ -389,6 +390,70 @@ class ApiShellSpec extends SparkSpec {
         assert(s("industry_breakdown").count() == 3) // 3 distinct types
         assert(s("trend_data").count() == 3)         // 3 distinct days
       case other => fail(s"insights failed: $other")
+    }
+  }
+
+  test("insights: each fused section equals its per-section plan in " +
+      "schema and rows; a NULL industry stays its own group; an empty " +
+      "window keeps its one summary row") {
+    // two rows without a type: one NULL group in the industry breakdown
+    val frame = recs.unionByName(Seq(
+        (5, 0.85, "High", "o2", "o4", "2024-03-12 06:00:00", 850.25),
+        (6, 0.65, "Medium", "o5", "o1", "2024-03-14 18:30:00", 650.5))
+      .toDF("id", "score", "confidence", "org1_id", "org2_id",
+        "created_at_s", "estimated_value")
+      .withColumn("recommendation_type", lit(null).cast("string"))
+      .withColumn("created_at", col("created_at_s").cast("timestamp"))
+      .drop("created_at_s"))
+    val (shell, _, _, _) = mkShell(frame = frame)
+    val t = bearerOf(shell.login("alice", "s3cret"))
+    def same(name: String, got: org.apache.spark.sql.DataFrame,
+             want: org.apache.spark.sql.DataFrame, ordered: Boolean): Unit = {
+      assert(got.schema === want.schema, name)
+      def rows(df: org.apache.spark.sql.DataFrame) = {
+        val r = df.collect().toSeq
+        if (ordered) r else r.sortBy(_.toString)
+      }
+      val (g, w) = (rows(got), rows(want))
+      assert(g.size === w.size, name)
+      g.zip(w).foreach { case (a, b) =>
+        a.toSeq.zip(b.toSeq).foreach {
+          case (x: Double, y: Double) =>
+            assert(math.abs(x - y) <= 1e-9 * math.max(x.abs, y.abs),
+              s"$name: $a vs $b")
+          case (x, y) => assert(x == y, s"$name: $a vs $b")
+        }
+      }
+    }
+    Seq(12 -> "2024-03-16 00:00:00", 30 -> "2024-03-16 12:30:00",
+        1 -> "2030-01-01 00:00:00").foreach { case (days, at) =>
+      val asOf = java.sql.Timestamp.valueOf(at)
+      val windowed = frame.filter(col("created_at") >=
+        new java.sql.Timestamp(asOf.getTime - days * 86400L * 1000))
+      shell.insights(days, asOf, Some(t),
+          industry = col("recommendation_type"),
+          action = col("confidence")) match {
+        case OkSections(s) =>
+          same("summary", s("summary"), Serve.insightsSummary(windowed),
+            ordered = true)
+          same("top", s("top_opportunities"), Serve.page(windowed, "score",
+            ascending = false, limit = 5, offset = 0), ordered = true)
+          same("industry", s("industry_breakdown"),
+            Serve.breakdown(windowed, col("recommendation_type")),
+            ordered = false)
+          same("action", s("action_distribution"),
+            Serve.breakdown(windowed, col("confidence")), ordered = false)
+          same("trend", s("trend_data"), Serve.dailyTrend(windowed,
+            col("created_at"), lit(asOf), days), ordered = true)
+          if (days == 12)
+            assert(s("industry_breakdown")
+              .filter(col("recommendation_type").isNull)
+              .select("n").as[Long].collect().toSeq === Seq(2L))
+          if (days == 1)
+            assert(s("summary").select("total_recommendations").as[Long]
+              .collect().toSeq === Seq(0L))
+        case other => fail(s"insights failed: $other")
+      }
     }
   }
 

@@ -23,7 +23,8 @@ Each checkout's benchmark stores an output fingerprint per workload and seed
 under .bench_build/fingerprints/ and checks later runs only against its own.
 After the pairs, the script compares the two checkouts' fingerprint files for
 every seed run, prints each difference, and exits non-zero with "outputs
-differ" when any file differs or exists on one side only.
+differ" when any file differs or exists on one side only. A workload that
+writes no fingerprints (online_serving) is reported as not compared.
 """
 import argparse
 import glob
@@ -46,9 +47,11 @@ def run_side(checkout, workload, seed, seconds, trace):
 
 
 def fingerprint_diffs(sides, workload, seeds):
-    """(file name, parent text, change text) for every fingerprint of
-    `workload` at `seeds` that differs between the checkouts; None marks a
-    file missing on that side."""
+    """(files found, diffs): the number of fingerprint files of `workload` at
+    `seeds` on either side, and (file name, parent text, change text) for
+    every one that differs between the checkouts; None marks a file missing
+    on that side."""
+    found = 0
     diffs = []
     for seed in sorted(set(seeds)):
         texts = {}
@@ -58,11 +61,12 @@ def fingerprint_diffs(sides, workload, seeds):
             for path in glob.glob(pattern):
                 with open(path) as fh:
                     texts.setdefault(os.path.basename(path), {})[side] = fh.read()
+        found += len(texts)
         for name, by_side in sorted(texts.items()):
             p, c = by_side.get("parent"), by_side.get("change")
             if p != c:
                 diffs.append((name, p, c))
-    return diffs
+    return found, diffs
 
 
 def quartiles(xs):
@@ -152,13 +156,18 @@ def main():
         print(f"{name:<32} {cell(pmed, pq1, pq3):>30} {cell(cmed, cq1, cq3):>30} "
               f"{wins:>3}/{len(pairs):<3} {'; '.join(verdicts)}")
 
-    diffs = fingerprint_diffs(sides, a.workload, a.seeds)
+    found, diffs = fingerprint_diffs(sides, a.workload, a.seeds)
+    seeds = " ".join(map(str, a.seeds))
+    if not found:
+        print(f"outputs not compared: no {a.workload} fingerprints exist for "
+              f"seeds {seeds} on either side")
+        return
     for name, p, c in diffs:
         print(f"fingerprint {name}: parent {p!r} vs change {c!r}")
     if diffs:
         print(f"outputs differ: {len(diffs)} fingerprint file(s)")
         sys.exit(1)
-    print(f"outputs identical: fingerprints of seeds {' '.join(map(str, a.seeds))} match")
+    print(f"outputs identical: fingerprints of seeds {seeds} match")
 
 
 if __name__ == "__main__":
