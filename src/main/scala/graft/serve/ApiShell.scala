@@ -171,7 +171,7 @@ object ApiShell {
    * @param accounts optional (account_id, summary) frame backing
    *   GET /api/accounts/{id}/summary.
    * @param onUpdate mutation callback for PATCH — production wiring is a
-   *   `Layout.upsertByKey` point update on the recommendations table
+   *   `Layout.patchRow` point update on the recommendations table
    *   (the q151 path); the shell enforces auth, existence, and the
    *   status→timestamp policy, and hands the stamped column map over.
    *   Returns false on store failure (→ 500).

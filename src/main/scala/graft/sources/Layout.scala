@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.DriverOps.footerRows
@@ -86,77 +87,27 @@ object Layout {
    * files far below the row-group sweet spot, and at 100 TB a scan's
    * task count and footer-read cost grow with FILE count, not byte
    * count. Rewrites the directory to ceil(totalBytes/targetBytes)
-   * files via one read → range-free `repartition` → write-to-temp, then
-   * swaps: verified-then-rename, with the previous generation deleted
-   * only AFTER the new one is in place.
-   *
-   * Correctness protocol (rename-atomic FS semantics):
-   *  1. the SNAPSHOT is `df.inputFiles` of the frame actually rewritten
-   *     — never a separate listing, so files appended by a racing
-   *     trigger between list and read cannot be deleted-but-not-copied
-   *     or copied-but-not-deleted (they simply stay for the next run);
-   *  2. the rewrite lands in a side directory, row-count-verified
-   *     BEFORE any destructive step;
-   *  3. a `_compaction_pending` marker listing the superseded files is
-   *     written, the new generation (unique per-run names — re-running
-   *     can never collide with a previous generation) is renamed in
-   *     with every rename result CHECKED, then the superseded files are
-   *     deleted and the marker removed. A crash mid-swap leaves marker
-   *     + both generations; [[recoverCompaction]] (run automatically at
-   *     entry) completes the deletion from the marker — duplicates are
-   *     transient and self-healing, data loss is impossible.
-   * Readers racing the swap on a plain filesystem may glimpse a mixed
-   * listing — the documented limit of directory-level parquet at scale;
-   * table formats (metadata-tracked file sets) exist precisely to close
-   * that gap, and this operator is the pattern they execute internally.
-   * Returns the new file count (or the unchanged snapshot count when
-   * the directory is already at-or-under target).
+   * files: one range-free `repartition` of the snapshot, committed by
+   * [[commitGeneration]] (verified-then-rename, the previous generation
+   * deleted only AFTER the new one is in place). Files appended by a
+   * racing trigger after the snapshot simply stay for the next run.
+   * Job shape: the schema read of `dir` and the repartitioned write
+   * (its shuffle and the write). Returns the new file count (or the
+   * unchanged snapshot count when the directory is already at-or-under
+   * target).
    */
-  def compactParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def compactParquet(spark: SparkSession, dir: String,
                      targetBytes: Long = 128L << 20): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverCompaction(spark, dir)
-    val df = spark.read.parquet(dir)
-    // the EXACT file set the rewrite reads — the only set safe to delete
-    val snapshot = df.inputFiles.map(new org.apache.hadoop.fs.Path(_))
-    // the marker protocol records bare file names resolved against `dir`;
-    // a nested (hive-partitioned) layout would flatten on rewrite and its
-    // delete lines would silently no-op — refuse up front. The intended
-    // target is flat streaming-sink output; partitioned tables compact
-    // per-partition (call per leaf directory).
-    val qualified = fs.makeQualified(path)
-    snapshot.foreach { p =>
-      require(fs.makeQualified(p).getParent == qualified,
-        s"compactParquet requires a FLAT directory; found nested file $p " +
-          s"under $dir — compact partitioned layouts per leaf directory")
+    val c = commitGeneration(spark, dir, "compactParquet", "compacted") {
+      (fs, df, snapshot) =>
+        val totalBytes = snapshot.map(p => fs.getFileStatus(p).getLen).sum
+        val targetFiles =
+          math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+        Option.when(snapshot.length > targetFiles)(
+          Rewrite(snapshot.toSet, df.repartition(targetFiles)))
     }
-    val totalBytes = snapshot.map(p => fs.getFileStatus(p).getLen).sum
-    val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    if (snapshot.length <= targetFiles) return snapshot.length
-    val expected = df.count()
-    // unique generation id: a rerun's names can never collide with a
-    // surviving previous generation; the tmp dir is per-generation too,
-    // so a second maintenance job entering concurrently can never wipe
-    // this job's verified-but-unrenamed generation (the former shared
-    // tmp was exactly that hazard)
-    val gen = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(dir + TmpInfix + gen)
-    df.repartition(targetFiles).write.mode("overwrite").parquet(tmp.toString)
-    val got = spark.read.parquet(tmp.toString).count()
-    require(got == expected,
-      s"compaction row-count mismatch ($got != $expected) — original left untouched")
-    val newFiles = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val plan = newFiles.zipWithIndex.map { case (f, i) =>
-      f.getPath.getName -> s"compacted-$gen-$i.parquet"
-    }
-    swapIn(fs, path, tmp, plan.toSeq, snapshot.map(_.getName).toSeq)
-    // drop cached file listings: a plan built over the dir BEFORE the
-    // swap would otherwise resolve deleted files at execution time
-    spark.catalog.refreshByPath(dir)
-    newFiles.length
+    c.written + c.untouched
   }
 
   final case class DeleteStats(filesRewritten: Int, filesUntouched: Int,
@@ -172,9 +123,9 @@ object Layout {
    * in place; here the lake IS the store). `updates` holds FULL rows
    * (same columns as the table, any order); rows whose key already
    * exists REPLACE the stored row, new keys INSERT. The whole upsert is
-   * ONE [[compactParquet]]-marker transaction: the new generation =
-   * (affected files minus matched keys) ∪ updates, row-count-verified
-   * before any destructive step — a crash at any point self-heals via
+   * ONE [[commitGeneration]]: the new generation = (affected files
+   * minus matched keys) ∪ updates, row-count-verified before any
+   * destructive step — a crash at any point self-heals via
    * [[recoverCompaction]], and a reader never sees the key absent.
    *
    * Scale contract: this is the POINT-update path — `updates` is a
@@ -190,36 +141,28 @@ object Layout {
    * [[graft.operators.Scd2]] / a partition-overwrite rebuild, not here.
    *
    * Job shape: the schema read of `dir`, the collect of `updates` (none
-   * when it is a local frame), the affected-file probe, the write. The
-   * row-count guard sums the parquet footers of the affected files and
-   * of the side generation (the row-group counts a `count()` of them
-   * reads) and side reads reuse the table schema, so neither costs a
-   * job.
-   *
-   * Reader contract: the superseded files are DELETED at the swap, so a
-   * plan over `dir` made before the upsert fails with FILE_NOT_EXIST
-   * when it executes after it and must be re-planned; readers and
-   * maintainers of one directory must be serialized by the caller.
+   * when it is a local frame), the affected-file probe, the write.
    */
-  def upsertByKey(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  updates: org.apache.spark.sql.DataFrame, keyCol: String,
-                  maxKeys: Int = 1000): UpsertStats = {
-    recoverCompaction(spark, dir)
-    upsertInto(spark, dir, spark.read.parquet(dir), updates, keyCol, maxKeys,
-      probed = None)
+  def upsertByKey(spark: SparkSession, dir: String, updates: DataFrame,
+                  keyCol: String, maxKeys: Int = 1000): UpsertStats =
+    upsert(spark, dir)(df =>
+      upsertPlan(spark, df, updates, keyCol, maxKeys, probed = None))
+
+  /** An upsert's [[commitGeneration]], with `plan` run on the table. */
+  private def upsert(spark: SparkSession, dir: String)(
+      plan: DataFrame => Rewrite): UpsertStats = {
+    val c = commitGeneration(spark, dir, "upsertByKey", "upserted")(
+      (_, df, _) => Some(plan(df)))
+    UpsertStats(c.written, c.untouched, c.removed, c.added - c.removed)
   }
 
-  /** The upsert transaction over the already-read table frame `df`.
-    * `probed` = the (file, matched rows) of the updates' keys when the
-    * caller has found them already ([[patchRow]]'s probe); otherwise one
-    * grouped scan finds them. */
-  private def upsertInto(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, df: DataFrame, updates: DataFrame,
-                         keyCol: String, maxKeys: Int,
-                         probed: Option[Seq[(String, Seq[Any])]]): UpsertStats = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = path.getFileSystem(conf)
+  /** The upsert's new generation over the table frame `df`. `probed` =
+    * the [[matchCounts]] of the updates' keys when the caller has found
+    * them already ([[patchRow]]'s probe); otherwise one probe finds
+    * them. */
+  private def upsertPlan(spark: SparkSession, df: DataFrame,
+                         updates: DataFrame, keyCol: String, maxKeys: Int,
+                         probed: Option[Map[(Path, Seq[Any]), Long]]): Rewrite = {
     require(updates.columns.sorted.sameElements(df.columns.sorted),
       s"upsertByKey: updates columns ${updates.columns.sorted.mkString(",")} " +
         s"must match table columns ${df.columns.sorted.mkString(",")}")
@@ -250,16 +193,8 @@ object Layout {
     require(rows.length == keys.length,
       s"upsertByKey: duplicate keys in updates — one row per $keyCol")
     val pred = col(keyCol).isin(keys: _*)
-    val snapshot = df.inputFiles.map(new org.apache.hadoop.fs.Path(_))
-    val qualified = fs.makeQualified(path)
-    snapshot.foreach { p =>
-      require(fs.makeQualified(p).getParent == qualified,
-        s"upsertByKey requires a FLAT directory; found nested file $p")
-    }
-    val affected = probed.getOrElse(df.filter(pred)
-      .groupBy(input_file_name().as("f")).agg(collect_list(col(keyCol)))
-      .collect().map(r => r.getString(0) -> r.getSeq[Any](1)).toSeq)
-    val matched = affected.map(_._2.length).sum
+    val hits = probed.getOrElse(matchCounts(df, pred, col(keyCol)))
+    val matched = hits.values.sum
     // more matches than distinct keys ⇒ the STORED table already holds
     // a duplicated key (corruption outside the marker protocol) — fail
     // loudly rather than emit negative rowsInserted stats
@@ -267,15 +202,12 @@ object Layout {
       s"upsertByKey: stored table holds duplicate $keyCol rows " +
         s"($matched matches for ${keys.length} keys) — repair the table " +
         "(deleteWhere + re-insert) before upserting")
-    val affectedFiles = affected.map { case (f, ks) =>
-      fs.makeQualified(new org.apache.hadoop.fs.Path(new java.net.URI(f))) ->
-        ks.toSet
-    }
-    val affectedSet = affectedFiles.map(_._1).toSet
-    def localOf(rs: Seq[org.apache.spark.sql.Row]) =
+    val keysOf = hits.keys.groupMap(_._1)(_._2.head).toSeq
+      .sortBy(_._1.getName).map { case (p, ks) => p -> ks.toSet }
+    def localOf(rs: Seq[Row]) =
       spark.createDataFrame(java.util.Arrays.asList(rs: _*), df.schema)
     val inserts = rows.toSeq.filterNot(r =>
-      affectedFiles.exists(_._2.contains(r.get(keyIdx))))
+      keysOf.exists(_._2.contains(r.get(keyIdx))))
     // each rewritten file's surviving rows and the updates of ITS keys
     // coalesce into ONE new file, so its key range (what min/max
     // skipping prunes on) does not widen; keys no file holds land
@@ -283,34 +215,15 @@ object Layout {
     // single-partition parts are concatenated as RDDs, because a
     // Dataset union of single-partition children is itself one
     // partition in Spark 4.
-    val parts = affectedFiles.map { case (p, ks) =>
+    val parts = keysOf.map { case (p, ks) =>
       spark.read.schema(df.schema).parquet(p.toString)
         .filter(!coalesce(pred, lit(false))) // NULL-key rows kept, as in deleteWhere
         .unionByName(localOf(rows.toSeq.filter(r => ks.contains(r.get(keyIdx)))))
     } ++ Seq(inserts).filter(_.nonEmpty).map(localOf)
-    val newGen = spark.createDataFrame(
-      spark.sparkContext.union(parts.map(_.coalesce(1).rdd)), df.schema)
-    val expected = footerRows(conf, affectedSet) - matched + keys.length
-    val gen = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(dir + TmpInfix + gen)
-    newGen.write.mode("overwrite").parquet(tmp.toString)
-    val newFiles = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val got = footerRows(conf, newFiles.map(_.getPath))
-    require(got == expected,
-      s"upsertByKey row-count mismatch ($got != $expected) — original " +
-        "left untouched")
-    val plan = newFiles.zipWithIndex.map { case (f, i) =>
-      f.getPath.getName -> s"upserted-$gen-$i.parquet"
-    }
-    swapIn(fs, path, tmp, plan.toSeq,
-      affectedSet.toSeq.sortBy(_.getName).map(_.getName))
-    // a long-lived serving plan over the dir (ApiShell's listing) must
-    // not resolve the pre-swap file set — refresh the path's cached
-    // listings as part of the transaction
-    spark.catalog.refreshByPath(dir)
-    UpsertStats(newFiles.length, snapshot.length - affectedSet.size,
-      matched, keys.length - matched)
+    Rewrite(keysOf.map(_._1).toSet,
+      spark.createDataFrame(
+        spark.sparkContext.union(parts.map(_.coalesce(1).rdd)), df.schema),
+      removed = matched, added = keys.length)
   }
 
   /**
@@ -325,41 +238,31 @@ object Layout {
    * with its `input_file_name()` (at most 2 rows per partition, which is
    * all the stored-duplicate guard needs), and the write. The setters
    * apply to a local (LocalRelation) copy of the probed row, so they
-   * cost no job; the row-count guard reads parquet footers, as in
-   * [[upsertByKey]], whose reader contract holds here too: a plan over
-   * `dir` made before the PATCH fails with FILE_NOT_EXIST afterwards and
-   * must be re-planned.
+   * cost no job.
    */
-  def patchRow(spark: org.apache.spark.sql.SparkSession, dir: String,
-               keyCol: String, keyValue: Any,
-               setters: Map[String, Column]): UpsertStats = {
-    // recover any crashed swap BEFORE reading: a pending marker means
-    // both generations may be on disk — reading through it would see
-    // the key twice (tripping the duplicate-key guard) or resolve
-    // files that the recovery then deletes
-    recoverCompaction(spark, dir)
-    val df = spark.read.parquet(dir)
-    val bad = setters.keySet.filterNot(df.columns.contains)
-    require(bad.isEmpty, s"patchRow: unknown column(s) ${bad.mkString(",")}")
-    require(!setters.contains(keyCol), "patchRow cannot rewrite the key")
-    val hits = df.filter(col(keyCol) === lit(keyValue))
-      .select(col("*"), input_file_name())
-      .rdd.mapPartitions(_.take(2)).collect()
-    require(hits.nonEmpty,
-      s"patchRow: no row with $keyCol = $keyValue (not found)")
-    val current = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row.fromSeq(hits.head.toSeq.init)),
-      df.schema)
-    val updated = setters.foldLeft(current) { case (acc, (c, e)) =>
-      acc.withColumn(c, e)
+  def patchRow(spark: SparkSession, dir: String, keyCol: String,
+               keyValue: Any, setters: Map[String, Column]): UpsertStats =
+    upsert(spark, dir) { df =>
+      val bad = setters.keySet.filterNot(df.columns.contains)
+      require(bad.isEmpty, s"patchRow: unknown column(s) ${bad.mkString(",")}")
+      require(!setters.contains(keyCol), "patchRow cannot rewrite the key")
+      val hits = df.filter(col(keyCol) === lit(keyValue))
+        .select(col("*"), input_file_name())
+        .rdd.mapPartitions(_.take(2)).collect()
+      require(hits.nonEmpty,
+        s"patchRow: no row with $keyCol = $keyValue (not found)")
+      val current = spark.createDataFrame(
+        java.util.List.of(Row.fromSeq(hits.head.toSeq.init)), df.schema)
+      val updated = setters.foldLeft(current) { case (acc, (c, e)) =>
+        acc.withColumn(c, e)
+      }
+      // two hits ⇒ the stored table duplicates the key: upsertPlan's
+      // matched-vs-keys guard rejects it
+      val keyIdx = df.columns.indexOf(keyCol)
+      val probed = hits.toSeq.groupMapReduce(r =>
+        (fileOf(r.getString(r.length - 1)), Seq(r.get(keyIdx))))(_ => 1L)(_ + _)
+      upsertPlan(spark, df, updated, keyCol, maxKeys = 1, Some(probed))
     }
-    // two hits ⇒ the stored table duplicates the key: upsertInto's
-    // matched-vs-keys guard rejects it
-    val keyIdx = df.columns.indexOf(keyCol)
-    val probed = hits.groupBy(r => r.getString(r.length - 1))
-      .map { case (f, rs) => f -> rs.map(_.get(keyIdx)).toSeq }.toSeq
-    upsertInto(spark, dir, df, updated, keyCol, maxKeys = 1, Some(probed))
-  }
 
   /**
    * Targeted row deletion from a flat parquet directory — the
@@ -377,86 +280,160 @@ object Layout {
    * table size. A table format's DELETE executes exactly this shape
    * internally.
    *
-   * Uses the [[compactParquet]] marker transaction verbatim (same
-   * marker, same side directory, same [[recoverCompaction]] replay):
-   * the kept rows of affected files land in the side dir,
-   * row-count-verified BEFORE any destructive step, then marker →
-   * renames → deletes. A crash at any point self-heals at the next
-   * entry of either maintenance job. An affected file whose every row
-   * matches is simply deleted (no empty rewrite file).
+   * The kept rows of the affected files are one [[commitGeneration]],
+   * so a crash at any point self-heals at the next entry of any
+   * maintenance job. An affected file whose every row matches is simply
+   * deleted (no empty rewrite file). Job shape: the schema read of
+   * `dir`, the affected-file probe, the write.
    */
-  def deleteWhere(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def deleteWhere(spark: SparkSession, dir: String,
                   predicate: Column): DeleteStats = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val c = commitGeneration(spark, dir, "deleteWhere", "deleted") {
+      (_, df, _) =>
+        val hits = matchCounts(df, predicate)
+        Option.when(hits.nonEmpty) {
+          val files = hits.keySet.map(_._1)
+          // NULL-predicate rows are KEPT: an erasure job deletes only rows
+          // the predicate PROVES match (`hits` counts true rows only; a
+          // plain !predicate would drop NULL rows from the rewrite too and
+          // trip the row-count guard — the job could never complete on
+          // NULL-bearing data)
+          Rewrite(files, spark.read.schema(df.schema)
+            .parquet(files.toSeq.map(_.toString): _*)
+            .filter(!coalesce(predicate, lit(false))),
+            removed = hits.values.sum)
+        }
+    }
+    DeleteStats(c.written, c.untouched, c.removed)
+  }
+
+  /** The affected-file probe of [[deleteWhere]] and [[upsertByKey]]:
+    * the rows of `df` matching `pred`, counted per (file, `by` values) in
+    * ONE job. Each task returns its counts, never matched rows, so the
+    * collect is bounded by the files (and `by` values) a task reads;
+    * parquet min/max pruning decides which files are read at all. */
+  private def matchCounts(df: DataFrame, pred: Column,
+                          by: Column*): Map[(Path, Seq[Any]), Long] =
+    df.filter(pred).select(input_file_name() +: by: _*).rdd
+      .mapPartitions(_.foldLeft(Map.empty[(String, Seq[Any]), Long]) {
+        (m, r) =>
+          val k = (r.getString(0), r.toSeq.tail)
+          m.updated(k, m.getOrElse(k, 0L) + 1L)
+      }.iterator)
+      .collect().toSeq
+      .groupMapReduce { case ((f, vs), _) => (fileOf(f), vs) }(_._2)(_ + _)
+
+  private def fileOf(inputFileName: String): Path =
+    new Path(new java.net.URI(inputFileName))
+
+  /** A maintenance job's change: the `superseded` snapshot files give
+    * way to `rows`, which hold their rows minus `removed` plus `added`. */
+  private final case class Rewrite(superseded: Set[Path], rows: DataFrame,
+                                   removed: Long = 0L, added: Long = 0L)
+
+  /** A commit's outcome: files written, snapshot files left in place,
+    * and the [[Rewrite]]'s row deltas (all zero when nothing changed). */
+  private final case class Committed(written: Int, untouched: Int,
+                                     removed: Long, added: Long)
+
+  /**
+   * THE generation commit of every maintenance job on a flat parquet
+   * directory ([[compactParquet]], [[deleteWhere]], [[upsertByKey]] and
+   * [[patchRow]]). Protocol (rename-atomic FS semantics):
+   *  1. [[recoverCompaction]] completes any crashed swap BEFORE `dir` is
+   *     read (through a pending marker a read would see both
+   *     generations); then `dir` is read once, and the SNAPSHOT is that
+   *     frame's `inputFiles` — never a separate listing, so a file
+   *     appended between list and read can be neither
+   *     deleted-but-not-copied nor copied-but-not-deleted. The marker
+   *     records bare file names resolved against `dir`, so a nested
+   *     (hive-partitioned) layout is refused up front: partitioned
+   *     tables are maintained per leaf directory.
+   *  2. `rewrite` plans the change from (fs, table frame, snapshot);
+   *     None leaves the directory as it is.
+   *  3. the new generation lands in a per-generation side directory
+   *     `<dir>_compact_tmp_<gen>` (unique per run, so a rerun's names
+   *     never collide with a surviving generation);
+   *  4. the row-count guard runs BEFORE any destructive step, from
+   *     parquet footers: the written files must hold the superseded
+   *     files' rows minus `removed` plus `added`;
+   *  5. 0-row files are left out of the generation, unless the whole
+   *     table is superseded and nothing else holds a row: then one stays,
+   *     so the directory reads as an empty table with its schema;
+   *  6. [[swapIn]] renames the files in as `<prefix>-<gen>-<i>.parquet`
+   *     and deletes the superseded ones; the path's cached listings are
+   *     refreshed.
+   * Side reads use the table schema and counts come from footers, so
+   * the commit itself runs only the write's jobs.
+   *
+   * Reader contract: the superseded files are DELETED at the swap, so a
+   * plan over `dir` made before a commit fails with FILE_NOT_EXIST when
+   * it executes after it and must be re-planned; readers and maintainers
+   * of one directory must be serialized by the caller.
+   */
+  private def commitGeneration(spark: SparkSession, dir: String, op: String,
+                               prefix: String)(
+      rewrite: (FileSystem, DataFrame, Seq[Path]) => Option[Rewrite])
+      : Committed = {
+    val path = new Path(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = path.getFileSystem(conf)
     recoverCompaction(spark, dir)
     val df = spark.read.parquet(dir)
-    val snapshot = df.inputFiles.map(new org.apache.hadoop.fs.Path(_))
+    val snapshot = df.inputFiles.toSeq.map(new Path(_))
     val qualified = fs.makeQualified(path)
     snapshot.foreach { p =>
       require(fs.makeQualified(p).getParent == qualified,
-        s"deleteWhere requires a FLAT directory; found nested file $p " +
-          s"under $dir — delete from partitioned layouts per leaf directory")
+        s"$op requires a FLAT directory; found nested file $p under $dir " +
+          "— maintain partitioned layouts per leaf directory")
     }
-    // predicate scan: min/max (and partition-file) pruning decides which
-    // files are read at all; only files with actual matches rewrite
-    val affected = df.filter(predicate)
-      .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    if (affected.isEmpty)
-      return DeleteStats(0, snapshot.length, 0L)
-    val matched = affected.map(_._2).sum
-    val affectedSet = affected.map { case (f, _) =>
-      fs.makeQualified(new org.apache.hadoop.fs.Path(new java.net.URI(f)))
-    }.toSet
-    val affectedDf = spark.read.parquet(affectedSet.map(_.toString).toSeq: _*)
-    val expected = affectedDf.count() - matched
-    val gen = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(dir + TmpInfix + gen)
-    // NULL-predicate rows are KEPT: an erasure job deletes only rows the
-    // predicate PROVES match (`matched` counts true rows only; a plain
-    // !predicate would drop NULL rows from the rewrite too and trip the
-    // row-count guard — the job could never complete on NULL-bearing data)
-    affectedDf.filter(!coalesce(predicate, lit(false)))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val got = spark.read.parquet(tmp.toString).count()
-    require(got == expected,
-      s"deleteWhere row-count mismatch ($got != $expected) — original left untouched")
-    val newFiles = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val plan = newFiles.zipWithIndex.map { case (f, i) =>
-      f.getPath.getName -> s"deleted-$gen-$i.parquet"
+    rewrite(fs, df, snapshot).fold(Committed(0, snapshot.length, 0L, 0L)) {
+      rw =>
+        val untouched = snapshot.length - rw.superseded.size
+        val expected = footerRows(conf, rw.superseded) - rw.removed + rw.added
+        val gen = java.util.UUID.randomUUID().toString.take(8)
+        val tmp = new Path(dir + TmpInfix + gen)
+        rw.rows.write.mode("overwrite").parquet(tmp.toString)
+        val written = fs.listStatus(tmp).toSeq
+          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+          .map(f => f.getPath -> footerRows(conf, Seq(f.getPath)))
+        val got = written.map(_._2).sum
+        require(got == expected,
+          s"$op row-count mismatch ($got != $expected) — original left untouched")
+        val kept = written.filter(_._2 > 0)
+        val files = if (kept.isEmpty && untouched == 0) written.take(1) else kept
+        swapIn(fs, path, tmp, files.zipWithIndex.map { case ((f, _), i) =>
+          f.getName -> s"$prefix-$gen-$i.parquet"
+        }, rw.superseded.toSeq.map(_.getName).sorted)
+        // a long-lived plan over the dir (ApiShell's listing) must not
+        // resolve the pre-swap file set
+        spark.catalog.refreshByPath(dir)
+        Committed(files.length, untouched, rw.removed, rw.added)
     }
-    swapIn(fs, path, tmp, plan.toSeq,
-      affectedSet.toSeq.sortBy(_.getName).map(_.getName))
-    spark.catalog.refreshByPath(dir)
-    DeleteStats(newFiles.length, snapshot.length - affectedSet.size, matched)
   }
 
   /**
-   * The shared swap transaction of [[compactParquet]] and
-   * [[deleteWhere]]: given a VERIFIED new generation sitting in `tmp`,
-   * commit the marker, rename the generation in, delete the superseded
-   * files, clean up. The marker IS the transaction: written complete to
-   * a side name and renamed into place (atomic — a crash mid-write
-   * strands only the ignored side file, never a truncated marker whose
-   * R-lines would replay without their D-lines), it records the tmp
-   * directory (`T` line) plus every rename and delete, so
-   * [[recoverCompaction]] replays it idempotently from ANY crash point
-   * — rename atomicity means each planned file exists at exactly one of
-   * (tmp src, final dst). Maintenance jobs on one directory must be
-   * SERIALIZED by the caller (one maintainer at a time — the same
-   * contract every directory-level parquet maintainer has); the
-   * per-generation tmp dirs bound the concurrent-entry damage to a
-   * failed job, never a wedged directory or destroyed generation.
+   * The swap step of [[commitGeneration]]: given a VERIFIED new
+   * generation sitting in `tmp`, commit the marker, rename the
+   * generation in, delete the superseded files, clean up. The marker IS
+   * the transaction: written complete to a side name and renamed into
+   * place (atomic — a crash mid-write strands only the ignored side
+   * file, never a truncated marker whose R-lines would replay without
+   * their D-lines), it records the tmp directory (`T` line) plus every
+   * rename and delete, so [[recoverCompaction]] replays it idempotently
+   * from ANY crash point — rename atomicity means each planned file
+   * exists at exactly one of (tmp src, final dst). Maintenance jobs on
+   * one directory must be SERIALIZED by the caller (one maintainer at a
+   * time — the same contract every directory-level parquet maintainer
+   * has). A second maintainer entering mid-job sweeps this job's side
+   * directory as an orphan ([[recoverCompaction]]); after the marker is
+   * committed that leaves R-lines no replay can complete.
    */
-  private def swapIn(fs: org.apache.hadoop.fs.FileSystem,
-                     path: org.apache.hadoop.fs.Path,
-                     tmp: org.apache.hadoop.fs.Path,
+  private def swapIn(fs: FileSystem, path: Path, tmp: Path,
                      plan: Seq[(String, String)],
                      deletes: Seq[String]): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(path, MarkerName)
-    val markerTmp = new org.apache.hadoop.fs.Path(path, MarkerTmpName)
+    val marker = new Path(path, MarkerName)
+    val markerTmp = new Path(path, MarkerTmpName)
     val out = fs.create(markerTmp, true)
     try out.write(
       (Seq(s"T ${tmp.getName}") ++
@@ -468,13 +445,11 @@ object Layout {
       s"maintenance marker rename failed: $markerTmp -> $marker " +
         "(nothing moved yet; original directory untouched)")
     plan.foreach { case (src, dst) =>
-      require(fs.rename(new org.apache.hadoop.fs.Path(tmp, src),
-        new org.apache.hadoop.fs.Path(path, dst)),
+      require(fs.rename(new Path(tmp, src), new Path(path, dst)),
         s"maintenance rename failed: $src -> $dst (marker left in place; " +
           "recoverCompaction completes the swap)")
     }
-    deletes.foreach(n =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, n), false))
+    deletes.foreach(n => fs.delete(new Path(path, n), false))
     fs.delete(marker, false)
     fs.delete(tmp, true)
   }
@@ -484,24 +459,22 @@ object Layout {
   // scans of the directory ignore it even if a crash strands it
   private val MarkerTmpName = "_compaction_pending.tmp"
 
-  /** Complete an interrupted [[compactParquet]] swap from its marker:
-    * finish the planned renames still sitting in the side directory,
-    * then apply the planned deletes, then drop the marker. Idempotent
-    * from any crash point (each planned file exists at exactly one of
-    * its two locations); a no-op without a marker. A stranded marker
-    * SIDE file (crash mid-marker-write — the transaction never began)
-    * is simply discarded. Runs automatically at every compactParquet
-    * entry. */
-  def recoverCompaction(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
+  /** Complete an interrupted [[swapIn]] from its marker: finish the
+    * planned renames still sitting in the side directory, then apply the
+    * planned deletes, then drop the marker. Idempotent from any crash
+    * point (each planned file exists at exactly one of its two
+    * locations); a no-op without a marker. A stranded marker SIDE file
+    * (crash mid-marker-write — the transaction never began) is simply
+    * discarded. Runs at the entry of every maintenance job, before
+    * [[commitGeneration]] reads the table. */
+  def recoverCompaction(spark: SparkSession, dir: String): Unit = {
+    val path = new Path(dir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(path, MarkerName)
+    val marker = new Path(path, MarkerName)
     // a .tmp marker means the crash happened BEFORE the transaction was
     // committed (the rename); nothing was moved — drop it and leave the
-    // directory as-is (the tmp generation, if any, is re-cleared by the
-    // next run's fs.delete(tmp, true))
-    fs.delete(new org.apache.hadoop.fs.Path(path, MarkerTmpName), false)
+    // directory as-is (the tmp generation, if any, is swept below)
+    fs.delete(new Path(path, MarkerTmpName), false)
     if (fs.exists(marker)) {
       val in = fs.open(marker)
       val lines =
@@ -512,20 +485,19 @@ object Layout {
       // `dir`); markers written before the per-generation tmp scheme
       // carry no T line and used the fixed legacy name
       val tmp = lines.headOption.collect {
-        case t if t.startsWith("T ") =>
-          new org.apache.hadoop.fs.Path(path.getParent, t.drop(2))
-      }.getOrElse(new org.apache.hadoop.fs.Path(dir + "_compact_tmp"))
+        case t if t.startsWith("T ") => new Path(path.getParent, t.drop(2))
+      }.getOrElse(new Path(dir + "_compact_tmp"))
       lines.filterNot(_.startsWith("T ")).foreach { line =>
         line.split(" ") match {
           case Array("R", src, dst) =>
-            val d = new org.apache.hadoop.fs.Path(path, dst)
-            val s = new org.apache.hadoop.fs.Path(tmp, src)
+            val d = new Path(path, dst)
+            val s = new Path(tmp, src)
             if (!fs.exists(d)) {
               require(fs.exists(s) && fs.rename(s, d),
                 s"compaction recovery cannot complete rename $src -> $dst")
             }
           case Array("D", name) =>
-            fs.delete(new org.apache.hadoop.fs.Path(path, name), false)
+            fs.delete(new Path(path, name), false)
           case other =>
             throw new IllegalStateException(
               s"unrecognized compaction marker line: ${other.mkString(" ")}")
@@ -544,7 +516,7 @@ object Layout {
           st.getPath.getName.startsWith(path.getName + TmpInfix))
         .foreach(st => fs.delete(st.getPath, true))
       // the pre-per-generation fixed tmp name, same reasoning
-      fs.delete(new org.apache.hadoop.fs.Path(dir + "_compact_tmp"), true)
+      fs.delete(new Path(dir + "_compact_tmp"), true)
     }
   }
 

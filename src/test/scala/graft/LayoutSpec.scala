@@ -258,31 +258,6 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs `f` submits from this thread (its own job group, so a
-    * job of any other thread on the shared session is not counted). */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"layout-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "job count")
-    try {
-      f
-      org.apache.spark.ListenerBusShim.drain(sc)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-    jobs.get
-  }
-
   test("patchRow on an 8-file table: at most 3 Spark jobs (schema read, " +
       "probe, write), one file rewritten per PATCH, file count unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("graft-patch-jobs")
@@ -310,6 +285,39 @@ class LayoutSpec extends SparkSpec {
     assert(back.filter(col("status") === "converted")
       .select("id").as[Long].collect().sorted.toSeq === Seq(5L, 421L))
     assert(back.filter(col("id") === 421L).select("v").as[Double].head === 422.0)
+  }
+
+  test("deleteWhere of one key on an 8-file table: at most 4 Spark jobs " +
+      "(schema read, probe, write)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-delete-jobs")
+      .resolve("table").toString
+    spark.range(800)
+      .selectExpr("id", "'new' AS status", "cast(id as double) AS v")
+      .repartitionByRange(8, col("id")).write.parquet(dir)
+    var stats: Layout.DeleteStats = null
+    val n = jobsOf {
+      stats = Layout.deleteWhere(spark, dir, col("id") === 421L)
+    }
+    assert(n <= 4, s"deleteWhere ran $n Spark jobs")
+    assert(stats === Layout.DeleteStats(1, 7, 1L))
+    val back = spark.read.parquet(dir)
+    assert(back.count() === 799L && back.filter(col("id") === 421L).isEmpty)
+  }
+
+  test("compactParquet of 16 small files: at most 3 Spark jobs (schema " +
+      "read, shuffle, write)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-compact-jobs")
+      .resolve("sink").toString
+    val df = spark.range(800).selectExpr("id", "cast(id as double) AS v")
+    df.repartition(16).write.parquet(dir)
+    var files = 0
+    val n = jobsOf { files = Layout.compactParquet(spark, dir) }
+    assert(n <= 3, s"compactParquet ran $n Spark jobs")
+    assert(files === 1)
+    val back = spark.read.parquet(dir)
+    assert(back.count() === 800L)
+    assert(back.agg(sum("v")).head.getDouble(0) ===
+      df.agg(sum("v")).head.getDouble(0))
   }
 
   test("upsertByKey over keys of two files: each rewritten file keeps its " +
@@ -356,12 +364,43 @@ class LayoutSpec extends SparkSpec {
     // user is the range key AND file boundary: user 0's file is all-match
     spark.range(300).selectExpr("id", "id % 3 AS user")
       .repartitionByRange(3, col("user")).write.parquet(dir)
+    def files() = new java.io.File(dir).listFiles
+      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    val before = files()
+    val userZero = spark.read.parquet(dir).filter(col("user") === 0)
+      .select(input_file_name()).distinct().as[String].collect()
+      .map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)).getName)
+      .toSet
+    assert(before.size === 3 && userZero.size === 1)
     val stats = graft.sources.Layout.deleteWhere(spark, dir,
       col("user") === 0)
-    assert(stats.rowsDeleted === 100L)
+    assert(stats === Layout.DeleteStats(0, 2, 100L))
+    // the all-match file is gone and no empty rewrite file took its place
+    assert(files() === before -- userZero)
     val back = spark.read.parquet(dir)
     assert(back.count() === 200L)
     assert(back.filter(col("user") === 0).count() === 0L)
+  }
+
+  test("deleteWhere of every row leaves an empty table that keeps the " +
+      "original schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-delete-every")
+      .resolve("table").toString
+    val df = spark.range(200)
+      .selectExpr("id", "id % 4 AS user", "cast(id as double) AS v")
+    df.repartition(4).write.parquet(dir)
+    def files() = new java.io.File(dir).listFiles
+      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    val stats = Layout.deleteWhere(spark, dir, col("id") >= 0)
+    // one 0-row file stays: a directory without one has no schema to read
+    assert(stats === Layout.DeleteStats(1, 0, 200L))
+    assert(files().size === 1 && files().forall(_.startsWith("deleted-")))
+    val back = spark.read.parquet(dir)
+    assert(back.count() === 0L)
+    assert(back.schema.map(f => (f.name, f.dataType)) ===
+      df.schema.map(f => (f.name, f.dataType)))
+    assert(Layout.deleteWhere(spark, dir, col("id") >= 0) ===
+      Layout.DeleteStats(0, 1, 0L))
   }
 
   test("date-partitioned write prunes partitions at planning time") {

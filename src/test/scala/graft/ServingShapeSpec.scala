@@ -10,35 +10,12 @@ import graft.sources.ResilientClient.Clock
 /**
  * Job and codegen gates of the two serving paths that run a query per
  * request: the binary→ADC→exact ANN query and the insights bundle. Jobs
- * are counted by a SparkListener on the call's job group (the
- * `LayoutSpec` pattern; threads the call starts inherit the group);
+ * are counted by `SparkSpec.jobsOf` (a listener on the call's own job
+ * group, which threads the call starts inherit);
  * compiled classes by Spark's `CodegenMetrics` source-size histogram.
  */
 class ServingShapeSpec extends SparkSpec {
   import spark.implicits._
-
-  private def jobsOf(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"serving-shape-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "job count")
-    try {
-      f
-      org.apache.spark.ListenerBusShim.drain(sc)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-    jobs.get
-  }
 
   private def compiledBy(f: => Any): Long = {
     val before = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount

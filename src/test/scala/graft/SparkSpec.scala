@@ -10,6 +10,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // keep session for other suites
+
+  /** Spark jobs `f` submits: counted by a listener on a job group of its
+    * own, which threads `f` starts inherit, so a job of any other thread
+    * on the shared session is not counted. */
+  protected def jobsOf(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "job count")
+    try {
+      f
+      org.apache.spark.ListenerBusShim.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    jobs.get
+  }
 }
 
 /** Deterministic ScalaCheck case driver shared by the *PropsSpec

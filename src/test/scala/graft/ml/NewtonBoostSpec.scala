@@ -193,22 +193,12 @@ class NewtonBoostSpec extends SparkSpec {
     val (train, _) = fixture
     val input = train.coalesce(1).cache()
     input.count()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsOf {
       NewtonBoost.fit(input, MetricsLedger.featureCols, "label",
         NewtonBoost.Params(rounds = 2, maxDepth = 6, learningRate = 0.1))
-      org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     input.unpersist()
-    assert(jobs.get() <= 3, s"${jobs.get()} jobs")
+    assert(jobs <= 3, s"$jobs jobs")
   }
 
   test("subsampled fit is deterministic given the id column") {
